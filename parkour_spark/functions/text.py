@@ -147,47 +147,16 @@ def normalize_text(text: Column | str) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), WHITESPACE, " ")
 
 
-def kgram_hashes(norm: Column | str, k: int = 8) -> Column:
-    """Stage 1 of winnowing fingerprints (Schleimer/Wilkerson/Aiken):
-    32-bit hashes of character k-grams. `norm` MUST be a materialized
-    normalized-text column (see normalize_text) — the lambda reads it per
-    element. One md5 per k-gram; a Rabin-Karp rolling hash inside a
-    Pandas UDF is the alternative when the per-doc k-gram count is
-    huge."""
-    c = F.col(norm) if isinstance(norm, str) else norm
-    n_grams = F.greatest(F.length(c) - (k - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: F.conv(F.substring(F.md5(c.substr(i, F.lit(k))), 1, 8), 16, 10).cast(
-            "long"
-        ),
-    )
-
-
-def winnow_select(grams: Column, w: int = 8) -> Column:
-    """Stage 2 of winnowing: distinct per-window minima of the k-gram
-    hash array — two docs sharing any substring ≥ k+w-1 chars share a
-    fingerprint, so overlap detection is an equi-join on the exploded
-    (doc, fp) table, never a pairwise scan. Keep this in a separate
-    projection from kgram_hashes so the gram array is computed once."""
-    n_windows = F.greatest(F.size(grams) - (w - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda j: F.array_min(F.slice(grams, j, w)),
-        )
-    )
-
-
 def _winnow_row(g, w: int, positions: bool):
-    """Per-row winnow core over one int64 gram-hash numpy array — ONE
-    copy shared by winnow_pos_arrow and winnow_text_arrow (r13): per
+    """Per-row winnow core over one int64 gram-hash numpy array: per
     window of w grams the min value and the 1-based offset of its FIRST
     occurrence (np.argmin == array_position-of-first-min), consecutive-
-    deduped by position (selected positions are non-decreasing, so this
-    equals array_distinct's first-occurrence order); the value-only
-    variant restores first-occurrence VALUE order via the return_index
-    sort. Returns (fps, poss) int64 arrays."""
+    deduped by position (selected positions are non-decreasing — a
+    smaller-or-equal value earlier in window j+1 would already have
+    been selected in window j — so this equals array_distinct's
+    first-occurrence order); the value-only variant restores
+    first-occurrence VALUE order via the return_index sort. Returns
+    (fps, poss) int64 arrays."""
     import numpy as np
 
     n = len(g)
@@ -211,8 +180,8 @@ def _winnow_row(g, w: int, positions: bool):
 
 def _winnow_assemble(ids, per_fp, per_pos, per_null, offsets, positions,
                      id_col, out):
-    """One output RecordBatch from per-row winnow results — the shared
-    assembly tail of the two arrow winnow paths (r13)."""
+    """One output RecordBatch (id, list of fps or fp/pos structs) from
+    per-row winnow results; per_null marks null-valued elements."""
     import numpy as np
     import pyarrow as pa
 
@@ -242,104 +211,33 @@ def _winnow_assemble(ids, per_fp, per_pos, per_null, offsets, positions,
     return pa.RecordBatch.from_arrays([ids, lst], [id_col, out])
 
 
-def winnow_pos_arrow(df, id_col: str, grams_col: str, w: int = 8,
-                     out: str = "__fpp", positions: bool = True):
-    """DataFrame-level winnowing over a staged k-gram hash column —
-    the engine's hot path for the fingerprint families (r12
-    optimization, guide §4.2: hand whole batches to vectorized native
-    code).
-
-    Result-identical to selecting `winnow_select_pos(grams)` (or
-    `winnow_select` with positions=False): per window of w grams, the
-    minimum value and (positions=True) the 1-based offset of its FIRST
-    occurrence (np.argmin == array_position-of-min: both take the
-    first minimum), deduplicated in first-occurrence order (selected
-    positions are provably non-decreasing — a smaller-or-equal value
-    earlier in window j+1 would already have been selected in window
-    j — so the sort-by-pos np.unique equals array_distinct's
-    first-occurrence order; for the value-only variant the
-    return_index sort restores it explicitly).
-
-    Why not the Column expression: HOF lambdas cannot bind locals, so
-    the expression form re-slices and re-scans each window several
-    times (measured at sf0.1: the winnow projection alone is ~22
-    task-CPU-seconds, 3-5× the md5 k-gram stage it follows); the
-    sliding_window_view min/argmin here is one vectorized pass.
-    Trade-off stated honestly: the gram arrays (8 bytes/char) cross
-    the JVM↔Arrow boundary both ways; measured end-to-end this is
-    still ~2× faster than the best single-evaluation expression form,
-    and the transform is partition-preserving with exactly two
-    columns shipped.
-
-    Null and empty gram arrays replicate the expression path under
-    ANSI semantics exactly: `greatest(size(g)-w+1, 1)` still yields
-    one window whose slice/min over null-or-empty input is NULL, so
-    the output is a single null-valued element — `[{fp:null,
-    pos:null}]` / `[null]` — never a null or empty list (downstream
-    explode_fast then drops the null element of the values variant
-    while the pos variant's null-fielded struct survives, exactly as
-    before; pinned in tests)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    if positions:
-        schema = f"{id_col} {id_type}, {out} array<struct<fp: long, pos: long>>"
-    else:
-        schema = f"{id_col} {id_type}, {out} array<long>"
-    # columns selected BY NAME (r13, ADVICE fix): the batch is read
-    # positionally below, so the input frame must be exactly these two
-    # columns in this order regardless of the caller's layout — and
-    # only these two cross the Python boundary (guide §4.1).
-    sel = df.select(id_col, grams_col)
-
-    def fn(it):
-        import numpy as np
-
-        for batch in it:
-            ids = batch.column(0)
-            gl = batch.column(1)
-            per_fp, per_pos, per_null, offsets = [], [], [], [0]
-            for row in gl:
-                if (
-                    not row.is_valid
-                    or len(row.values) == 0
-                    or row.values.null_count
-                ):
-                    # one null-valued window, matching the expression —
-                    # incl. the [null] gram array kgram_hashes yields
-                    # for NULL text (r13: the numpy int64 cast was
-                    # silently rendering that null as INT64_MIN;
-                    # array_min over an all-null window is null in the
-                    # expression path, and a null element only arises
-                    # from null input text, where every window is null)
-                    per_fp.append(np.zeros(1, dtype=np.int64))
-                    per_pos.append(np.zeros(1, dtype=np.int64))
-                    per_null.append(np.ones(1, dtype=bool))
-                    offsets.append(offsets[-1] + 1)
-                    continue
-                g = np.asarray(row.values, dtype=np.int64)
-                fps, poss = _winnow_row(g, w, positions)
-                per_fp.append(fps)
-                per_pos.append(poss)
-                per_null.append(np.zeros(len(fps), dtype=bool))
-                offsets.append(offsets[-1] + len(fps))
-            yield _winnow_assemble(
-                ids, per_fp, per_pos, per_null, offsets, positions,
-                id_col, out,
-            )
-
-    return sel.mapInArrow(fn, schema)
-
-
 def winnow_text_arrow(df, id_col: str, norm_col: str, k: int = 8,
                       w: int = 8, out: str = "__fpp",
                       positions: bool = True):
-    """FUSED k-gram md5 hashing + winnowing over the NORMALIZED text
-    column in ONE mapInArrow pass (r13; guide §4.2, and §2.3 "project
-    before the exchange" applied to the Python boundary: the staged
-    form shipped an 8-byte-per-character gram array JVM→Python →JVM;
-    this ships the text once and returns only the selected
-    fingerprints).
+    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken) of the
+    NORMALIZED text column (see normalize_text): 32-bit md5 hashes of
+    character k-grams, then per window of w grams the minimum — two
+    docs sharing any substring ≥ k+w-1 chars share a fingerprint, so
+    overlap detection is an equi-join on the exploded (doc, fp) table,
+    never a pairwise scan. `positions=True` yields distinct
+    struct<fp,pos> (pos = 1-based char offset of the selected k-gram;
+    ties in a window resolve to the FIRST minimum, DuckDB
+    list_position semantics), which upgrades overlap COUNTING
+    (dedup.winnow_overlap_pairs) to SPAN detection
+    (dedup.substring_overlap_spans); `positions=False` yields the
+    distinct fp values in first-occurrence order.
 
-    Result-identical to kgram_hashes(norm, k) → winnow_pos_arrow(…):
+    ONE mapInArrow pass (guide §4.2, and §2.3 "project before the
+    exchange" applied to the Python boundary): the text crosses once
+    and only the selected fingerprints come back. As Column
+    higher-order functions the window minima re-slice and re-scan each
+    window several times (~22 task-CPU-s at sf0.1); a staged k-gram
+    array would ship 8 bytes per character each way.
+
+    Result-identical to the Column expressions
+    `kgram_hashes(nt, k)` → `winnow_select[_pos](grams, w)` kept in
+    tests/column_reference.py (pinned in tests/test_r13_opt.py and
+    tests/test_r12_opt.py):
     - gram i (1-based) = conv(substr(md5(substr(nt, i, k)), 1, 8), 16,
       10)::long == int of the first 4 md5 bytes, big-endian, of the
       UTF-8 encoding of the k-CHARACTER slice. Python str slicing is
@@ -350,13 +248,9 @@ def winnow_text_arrow(df, id_col: str, norm_col: str, k: int = 8,
     - n_grams = greatest(length(nt) - (k-1), 1): short rows produce ONE
       gram over the truncated slice (Python slicing truncates the same
       way); empty strings hash md5("") — a real value, never null.
-    - NULL text reproduces the expression path's single null-valued
-      window element ([{fp:null,pos:null}] / [null]): kgram_hashes(null)
-      is one null gram (greatest(null,1) = 1 window over a null md5)
-      and winnowing it yields exactly the null element the staged
-      winnow_pos_arrow emits for null/empty gram arrays.
-    - The winnow stage is the SAME _winnow_row core winnow_pos_arrow
-      runs — one copy, pinned differentially in tests/test_r13_opt.py."""
+    - NULL text yields a single null-valued element
+      ([{fp:null,pos:null}] / [null]), as the expressions do: one null
+      gram, one window, a null minimum."""
     id_type = df.schema[id_col].dataType.simpleString()
     if positions:
         schema = f"{id_col} {id_type}, {out} array<struct<fp: long, pos: long>>"
@@ -405,50 +299,6 @@ def winnow_text_arrow(df, id_col: str, norm_col: str, k: int = 8,
             )
 
     return sel.mapInArrow(fn, schema)
-
-
-def winnow_select_pos(grams: Column, w: int = 8) -> Column:
-    """Position-carrying variant of winnow_select — distinct
-    struct<fp,pos> per window minimum, where pos is the 1-based char
-    offset of the selected k-gram in the normalized text. The positions
-    are what upgrade winnowing from overlap COUNTING
-    (winnow_overlap_pairs) to overlap SPAN detection
-    (dedup.substring_overlap_spans): a verbatim shared substring shows
-    up as a run of shared fps whose positions advance in lock-step in
-    both docs.
-
-    Ties inside a window resolve to the FIRST minimum (array_position
-    semantics, identical to DuckDB list_position), so both engines
-    select the same (fp, pos). pos determines fp (one hash per
-    offset), so the struct distinct is a distinct on pos."""
-    n_windows = F.greatest(F.size(grams) - (w - 1), F.lit(1))
-
-    # transform-over-singleton as a let-binding (r12): HOF lambdas
-    # cannot bind locals and subexpression elimination does not reach
-    # inside them, so the naive form re-slices each window 3× and
-    # re-scans it for the min twice. Binding the slice and its min via
-    # single-element transforms evaluates each exactly once per window
-    # (measured ~2× on the winnow projection; the engine's hot paths
-    # use winnow_pos_arrow, which is faster still).
-    def per_window(j: Column) -> Column:
-        return F.element_at(
-            F.transform(
-                F.array(F.slice(grams, j, w)),
-                lambda win: F.element_at(
-                    F.transform(
-                        F.array(F.array_min(win)),
-                        lambda m: F.struct(
-                            m.alias("fp"),
-                            (j - 1 + F.array_position(win, m)).alias("pos"),
-                        ),
-                    ),
-                    1,
-                ),
-            ),
-            1,
-        )
-
-    return F.array_distinct(F.transform(F.sequence(F.lit(1), n_windows), per_window))
 
 
 def bigrams(toks: Column) -> Column:

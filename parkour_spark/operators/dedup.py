@@ -4,7 +4,9 @@ embedding-cosine near-dup.
 Beyond-reference surface (SURVEY §7.6) — the training-data-pipeline
 dedup family, built Spark-first:
 
-- Everything is Column expressions + joins; no Python in the hot path.
+- Column expressions + joins, except the per-row numeric kernels
+  (MinHash and hyperplane signatures, in-bucket pair explodes,
+  winnowing), which run once per Arrow batch in NumPy.
 - Hashing uses md5 (bit-identical in Spark SQL and DuckDB/ANSI SQL), so
   each operator has an exact cross-engine oracle. A lexicographic min
   over per-token md5 hex digests is a valid MinHash permutation proxy:
@@ -95,76 +97,21 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
 
 def minhash_signature(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 12,
-    ngram_n: int = 3, engine: str = "arrow",
+    ngram_n: int = 3,
 ) -> DataFrame:
     """(id, sig_0..sig_{k-1}): sig_i = min over shingles of
     (a_i * x + b_i) mod P, x = first 8 md5 hex chars of the shingle.
     Computed entirely scan-side (no shuffle), ONE digest per feature
     instead of num_hashes — the md5 is the dominant cost at scale.
 
-    `engine="arrow"` (default, r13) computes the md5+minhash fold
-    vectorized in a mapInArrow pass — see _minhash_signature_arrow for
-    the value-identity argument; tokenize/shingle stay JVM-side either
-    way. `engine="column"` keeps the pure-Column expression path (the
-    differential-test reference and the plan-assertion surface):
-
-    All num_hashes minima are folded in a single `aggregate` pass with an
-    array<long> accumulator (not num_hashes separate transform/array_min
-    expressions): one small expression tree instead of k large ones keeps
-    per-query planning+JIT time — the dominant cold cost — flat in k.
-    Each stage lives in its own projection so the expensive array exprs
-    are evaluated once per row (CollapseProject refuses to inline
-    non-cheap expressions used more than once)."""
-    if engine == "arrow":
-        return _minhash_signature_arrow(df, text_col, id_col, num_hashes, ngram_n)
-    params = minhash_params(num_hashes)
-    a_arr = F.array(*[F.lit(a) for a, _ in params])  # foldable → hoisted
-    b_arr = F.array(*[F.lit(b) for _, b in params])
-    staged = _features_df(df, text_col, id_col, ngram_n, out="__feats")
-    hashed = staged.select(
-        F.col(id_col), F.transform("__feats", F.md5).alias("__md5")
-    )
-    parsed = hashed.select(
-        F.col(id_col),
-        F.transform(
-            "__md5",
-            lambda h: F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % MINHASH_P,
-        ).alias("__x"),
-    )
-    init = F.array_repeat(F.lit(MINHASH_P).cast("long"), num_hashes)
-    mins = F.aggregate(
-        "__x",
-        init,
-        lambda acc, x: F.transform(
-            acc,
-            lambda m, i: F.least(
-                m,
-                (F.element_at(a_arr, i + 1) * x + F.element_at(b_arr, i + 1))
-                % MINHASH_P,
-            ),
-        ),
-    )
-    sigs = parsed.select(F.col(id_col), mins.alias("__sigs"))
-    return sigs.select(
-        F.col(id_col),
-        *[F.col("__sigs")[i].alias(f"sig_{i}") for i in range(num_hashes)],
-    )
-
-
-def _minhash_signature_arrow(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, ngram_n: int
-) -> DataFrame:
-    """Vectorized MinHash signatures via mapInArrow (r13; guide §4.2 —
-    the signature projection was the LSH family's residual CPU wall:
-    the per-shingle md5 + k modular multiplies ran as JIT/alloc-bound
-    JVM expression eval, profiled at 18s stage executorRunTime vs 5s
-    CPU per sf0.1 run in r12).
-
-    VALUE-IDENTICAL to the Column path (`engine="column"`, the
-    differential-test reference):
-    - tokenize/shingle/array_distinct stay JVM-side (_features_df —
-      shared with the column path, so lower/trim/split semantics
-      cannot diverge by construction);
+    Tokenize/shingle/array_distinct stay JVM-side (_features_df); the
+    md5 + minhash fold runs vectorized in one mapInArrow pass (guide
+    §4.2 — as JVM expression eval the per-shingle md5 + k modular
+    multiplies were JIT/alloc-bound, profiled at 18s stage
+    executorRunTime vs 5s CPU per sf0.1 run). Value identity with the
+    expression form `conv(substr(md5(shingle),1,8),16,10) % P` folded
+    by `aggregate` (tests/column_reference.py, pinned in
+    tests/test_r13_opt.py):
     - per shingle: x = first 4 md5 bytes big-endian over the UTF-8
       string == conv(substr(md5_hex,1,8),16,10)::long; then x mod P.
       Arrow hands the shingles over as binary — the same UTF-8 bytes
@@ -175,9 +122,8 @@ def _minhash_signature_arrow(
       exact for v < 2^62, and a_i,b_i,x < P keeps v < 2^62; ~11×
       faster than vectorized `%` by skipping the int64 division) and
       one segmented np.minimum.reduceat per hash;
-    - EMPTY feature arrays yield sig_i = P (the expression aggregate's
-      init), NULL arrays yield null sigs (aggregate over null) — both
-      pinned in tests/test_r13_opt.py.
+    - EMPTY feature arrays yield sig_i = P (the fold's init), NULL
+      arrays yield null sigs.
 
     Exactly two columns cross the boundary each way (guide §4.1)."""
     params = minhash_params(num_hashes)
@@ -508,7 +454,6 @@ def prefix_filter_pairs(
     threshold_num: int = 4,
     threshold_den: int = 5,
     ngram_n: int = 3,
-    engine: str = "arrow",
 ) -> DataFrame:
     """EXACT shingle-set Jaccard ≥ num/den via prefix filtering — the
     SSJoin/PPJoin candidate scheme (Chaudhuri et al., ICDE 2006; Xiao
@@ -540,8 +485,8 @@ def prefix_filter_pairs(
     only — prefixes hold each doc's globally rarest (1−t)·|X|+1
     shingles, so the quadratic term concentrates on low-df tokens by
     construction (rarest-first is exactly the PPJoin ordering
-    heuristic). Four exchanges: df agg, df join, per-doc rank window,
-    bucket groupBy; verify joins touch candidate docs only. Unlike
+    heuristic). Four exchanges: df agg, df join, per-doc prefix
+    aggregate, bucket groupBy; verify joins touch candidate docs only. Unlike
     `ngram_jaccard_pairs_capped` there is no dropped-shingle recall
     condition to monitor — this is the path when missed boilerplate
     pairs are not acceptable.
@@ -553,6 +498,59 @@ def prefix_filter_pairs(
     contract)."""
     if not (0 < threshold_num <= threshold_den):
         raise ValueError("threshold must be a rational in (0, 1]")
+    pref = _prefix_tokens(
+        df, text_col, id_col, threshold_num, threshold_den, ngram_n
+    )
+    # Same single-shuffle bucket-pair shape as _bucket_pairs, but each
+    # bucket member carries its SET SIZE and PREFIX POSITION so both
+    # classic PPJoin prunes apply during the pair explode:
+    # - length filter: J ≥ t ⇒ |A∩B| ≥ t·|A∪B| ⇒ den·min(|A|,|B|) ≥
+    #   num·max(|A|,|B|);
+    # - positional filter (Xiao et al. 2008): a qualifying pair needs
+    #   overlap α = ⌈t/(1+t)·(|A|+|B|)⌉, and an occurrence at prefix
+    #   positions (i, j) bounds it by 1 + min(|A|−i, |B|−j) — complete
+    #   because the pair's FIRST shared token (which the prefix lemma
+    #   puts in both prefixes) attains the bound; pruning is
+    #   per-occurrence, the pair survives via any passing occurrence.
+    # Both prunes are integer arithmetic (α test cross-multiplied by
+    # num+den). Measured at sf0.1: 118 826 raw → 43 543 after length
+    # → 12 784 after positional (−89% total) before the exact verify.
+    # Buckets are plain collect_list; the explode normalizes emitted
+    # pairs to (least, greatest) (same argument as _bucket_pairs).
+    member = F.struct(
+        F.col(id_col).alias("i"),
+        F.col("__n").alias("n"),
+        F.col("__pos").alias("p"),
+    )
+    buckets = (
+        pref.groupBy("band_key")
+        .agg(F.collect_list(member).alias("__ms"))
+        .where(F.size("__ms") > 1)
+    )
+    cand = (
+        _prefix_pairs_arrow(buckets.select("__ms"), threshold_num, threshold_den)
+        .distinct()
+        .persist()
+    )
+    # Eagerly materialized: verify consumes it three times (see
+    # minhash_dedup_pairs).
+    cand.count()
+    return jaccard_verify(
+        cand, df, text_col, id_col, threshold_num / threshold_den, ngram_n
+    )
+
+
+def _prefix_tokens(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold_num: int,
+    threshold_den: int,
+    ngram_n: int,
+) -> DataFrame:
+    """prefix_filter_pairs' prefix stage: (id, band_key = prefix token,
+    __n = set size, __pos = 1-based prefix position) for every token in
+    each doc's rarest-first prefix of length n − ⌈t·n⌉ + 1."""
     ts = _feature_sets(df, text_col, id_col, ngram_n).withColumn(
         "__n", F.size("toks")
     )
@@ -583,7 +581,7 @@ def prefix_filter_pairs(
             ).alias("__dt"),
         )
     )
-    pref = _explode_fast(
+    return _explode_fast(
         grouped.select(
             F.col(id_col),
             F.col("__n"),
@@ -598,91 +596,6 @@ def prefix_filter_pairs(
         F.col("__e.tok").alias("band_key"),
         F.col("__n"),
         (F.col("__i") + 1).alias("__pos"),
-    )
-    # Same single-shuffle bucket-pair shape as _bucket_pairs, but each
-    # bucket member carries its SET SIZE and PREFIX POSITION so both
-    # classic PPJoin prunes apply during the pair explode:
-    # - length filter: J ≥ t ⇒ |A∩B| ≥ t·|A∪B| ⇒ den·min(|A|,|B|) ≥
-    #   num·max(|A|,|B|);
-    # - positional filter (Xiao et al. 2008): a qualifying pair needs
-    #   overlap α = ⌈t/(1+t)·(|A|+|B|)⌉, and an occurrence at prefix
-    #   positions (i, j) bounds it by 1 + min(|A|−i, |B|−j) — complete
-    #   because the pair's FIRST shared token (which the prefix lemma
-    #   puts in both prefixes) attains the bound; pruning is
-    #   per-occurrence, the pair survives via any passing occurrence.
-    # Both prunes are integer arithmetic (α test cross-multiplied by
-    # num+den). Measured at sf0.1: 118 826 raw → 43 543 after length
-    # → 12 784 after positional (−89% total) before the exact verify.
-    # Struct sort (Column engine only) is by the leading id field, so
-    # id_a < id_b as in _bucket_pairs; the arrow explode takes plain
-    # collect_list buckets and normalizes emitted pairs to
-    # (least, greatest) instead — set-identical, and the wide
-    # aggregation sheds the per-row hash-set insert + per-bucket
-    # struct sort (r13 wave 3, same argument as _bucket_pairs).
-    member = F.struct(
-        F.col(id_col).alias("i"),
-        F.col("__n").alias("n"),
-        F.col("__pos").alias("p"),
-    )
-    if engine == "arrow":
-        buckets = (
-            pref.groupBy("band_key")
-            .agg(F.collect_list(member).alias("__ms"))
-            .where(F.size("__ms") > 1)
-        )
-        cand = (
-            _prefix_pairs_arrow(
-                buckets.select("__ms"), threshold_num, threshold_den
-            )
-            .distinct()
-            .persist()
-        )
-    else:
-        buckets = (
-            pref.groupBy("band_key")
-            .agg(F.array_sort(F.collect_set(member)).alias("__ms"))
-            .where(F.size("__ms") > 1)
-        )
-        ms = F.col("__ms")
-        ts_sum = threshold_num + threshold_den
-        pair_expr = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.filter(
-                    F.transform(
-                        F.slice(ms, i + 2, F.size(ms)),
-                        lambda y: F.struct(
-                            x["i"].alias("id_a"),
-                            y["i"].alias("id_b"),
-                            x["n"].alias("n_a"),
-                            y["n"].alias("n_b"),
-                            x["p"].alias("p_a"),
-                            y["p"].alias("p_b"),
-                        ),
-                    ),
-                    lambda p: (
-                        threshold_den * F.least(p["n_a"], p["n_b"])
-                        >= threshold_num * F.greatest(p["n_a"], p["n_b"])
-                    )
-                    & (
-                        (F.lit(1) + F.least(p["n_a"] - p["p_a"], p["n_b"] - p["p_b"]))
-                        * ts_sum
-                        >= threshold_num * (p["n_a"] + p["n_b"])
-                    ),
-                ),
-            )
-        )
-        cand = (
-            _explode_fast(buckets, pair_expr, "__p")
-            .select("__p.id_a", "__p.id_b")
-            .distinct()
-            .persist()
-        )
-    # Eagerly materialized: verify consumes it three times (see
-    # minhash_dedup_pairs).
-    cand.count()
-    return jaccard_verify(
-        cand, df, text_col, id_col, threshold_num / threshold_den, ngram_n
     )
 
 
@@ -827,17 +740,18 @@ def embedding_band_keys_arrow(
 ) -> DataFrame:
     """(id, band_key) rows via ONE numpy matmul per Arrow batch.
 
-    The Column-HOF signature path (`embedding_block_candidates`,
-    engine="column") evaluates n_bands·band_bits·dim interpreted
-    expression ops per row — fine for a handful of bands, but auto-sized
-    banding at corpus scale wants hundreds of bands × 10+ bits, where
-    the interpreted cost dominates the whole query. Here the plane
-    matrix is a broadcast numpy constant and each Arrow batch does
-    (batch × dim) @ (dim × total_planes) in BLAS, then packs each
-    band's sign bits into a single long key
-    (band_idx << band_bits | bits) — same key space as the Column
-    path, ~100× less scan CPU. Mirrors the IVF assignment design
-    (similarity.py, r3)."""
+    Auto-sized banding at corpus scale wants hundreds of bands × 10+
+    bits; as Column higher-order functions that is
+    n_bands·band_bits·dim interpreted expression ops per row, ~100× the
+    scan CPU of this path. Here the plane matrix is a broadcast numpy
+    constant and each Arrow batch does (batch × dim) @ (dim ×
+    total_planes) in BLAS, then packs each band's sign bits into a
+    single long key (band_idx << band_bits | bits). Mirrors the IVF
+    assignment design (similarity.ivf_assign_arrow).
+
+    A NULL vector has no signature: its row emits no band keys, so it
+    joins no bucket — the same outcome as the exact path, where its
+    null cosine fails every threshold."""
     import numpy as np
     import pandas as pd
 
@@ -850,6 +764,7 @@ def embedding_band_keys_arrow(
 
     def gen(batches):
         for pdf in batches:
+            pdf = pdf[pdf[vec_col].notna()]
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
@@ -862,74 +777,41 @@ def embedding_band_keys_arrow(
                 {id_col: np.repeat(ids, n_bands), "band_key": keys.reshape(-1)}
             )
 
+    id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} long, band_key long"
+        gen, schema=f"{id_col} {id_type}, band_key long"
     )
 
 
 def _bucket_pairs(
-    exploded: DataFrame, id_col: str, max_bucket: int | None,
-    engine: str = "arrow",
+    exploded: DataFrame, id_col: str, max_bucket: int | None
 ) -> DataFrame:
     """(id, band_key) → distinct candidate pairs (a < b) sharing a
     bucket. ONE shuffle: groupBy(band_key) collects each bucket, pairs
     explode inside it — never a self-join, never a cartesian.
 
-    `engine="arrow"` (default, r13) generates the triangular pairs in
-    a vectorized mapInArrow pass — see _triangle_pairs_arrow for the
-    identity argument. `engine="column"` keeps the pure-Column nested-
-    transform explode (the differential-test reference): its per-
-    element `slice(ids, i+2, size)` copies the array TAIL once per
-    member, so one bucket of size b allocates O(b²) elements of
-    generic-array slices plus a struct per pair — the profiled CPU
-    block the arrow path removes (guide §2 fan-out control, §4.2).
-
-    The arrow path's buckets are plain collect_list (r13 wave 3): the
-    per-row hash-set dedup of collect_set and the per-bucket (string)
-    array_sort only served to make in-array index order ⟺ id order for
-    the Column explode's `i < j` emission. The arrow explode instead
-    normalizes each emitted pair to (least, greatest) and drops equal
-    ids, which is set-identical for ANY input multiset:
+    The triangular pairs are generated in a vectorized mapInArrow pass
+    (_triangle_pairs_arrow; guide §2 fan-out control, §4.2). Buckets
+    are plain collect_list: the explode normalizes each emitted pair to
+    (least, greatest) and drops equal ids, which is set-identical for
+    ANY input multiset:
     {(min(x,y), max(x,y)) : i < j, ids[i] ≠ ids[j]} over a list with
     duplicates ≡ the unordered distinct-element pairs of the set —
-    duplicate pairs collapse in the consumers' mandatory `.distinct()`.
-    (Every current caller feeds unique (id, band_key) rows anyway —
-    feature sets are array_distinct, band keys carry the band index —
-    which also keeps the `max_bucket` size test identical across
-    engines; the normalization just removes the proof obligation for
-    the pair SET.) Differentially pinned incl. a duplicate-row corpus
-    in tests/test_r13_opt.py."""
-    if engine == "arrow":
-        buckets = (
-            exploded.groupBy("band_key")
-            .agg(F.collect_list(id_col).alias("__ids"))
-            .where(F.size("__ids") > 1)
-        )
-        if max_bucket is not None:
-            buckets = buckets.where(F.size("__ids") <= max_bucket)
-        return _triangle_pairs_arrow(buckets.select("__ids")).distinct()
+    duplicate pairs collapse in the mandatory `.distinct()`. (Every
+    current caller feeds unique (id, band_key) rows anyway — feature
+    sets are array_distinct, band keys carry the band index — so the
+    `max_bucket` size test counts distinct members.) Differentially
+    pinned against the sorted-distinct nested-transform explode
+    (tests/column_reference.py), incl. a duplicate-row corpus, in
+    tests/test_r13_opt.py."""
     buckets = (
         exploded.groupBy("band_key")
-        .agg(F.array_sort(F.collect_set(id_col)).alias("__ids"))
+        .agg(F.collect_list(id_col).alias("__ids"))
         .where(F.size("__ids") > 1)
     )
     if max_bucket is not None:
         buckets = buckets.where(F.size("__ids") <= max_bucket)
-    ids = F.col("__ids")
-    pair_expr = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        _explode_fast(buckets, pair_expr, "__p")
-        .select("__p.id_a", "__p.id_b")
-        .distinct()
-    )
+    return _triangle_pairs_arrow(buckets.select("__ids")).distinct()
 
 
 # Pair-emission flush threshold for the arrow triangular explodes: one
@@ -940,21 +822,15 @@ _PAIR_FLUSH = 1 << 20
 
 
 def _triangle_pairs_arrow(bk: DataFrame) -> DataFrame:
-    """Triangular in-bucket pair explode, vectorized (r13, guide §4.2):
-    input is exactly one column — the per-bucket SORTED-distinct id
+    """Triangular in-bucket pair explode, vectorized (guide §4.2):
+    input is exactly one column — the per-bucket collect_list id
     array — and output is (id_a, id_b) rows, id_a < id_b.
 
-    SET-IDENTICAL to the nested-transform Column explode
-    (`_bucket_pairs(engine="column")`, the differential reference):
-    the Column path emits {(ids[i], ids[j]) : i < j} over sorted
-    DEDUPED arrays; this path walks UNSORTED collect_list arrays and
-    normalizes each pair to (least, greatest), dropping equal ids —
-    the same unordered distinct-element pair set (see _bucket_pairs),
-    and element/duplicate ORDER inside one bucket's emission is
-    irrelevant because every consumer applies `.distinct()` (a set
-    operation) first. Dropping collect_set + array_sort removes a
-    per-row hash-set insert and a per-bucket (string-comparison) sort
-    from the wide aggregation (r13 wave 3). Implementation: per input
+    Walks UNSORTED arrays and normalizes each pair to (least,
+    greatest), dropping equal ids — the unordered distinct-element pair
+    set (see _bucket_pairs); element/duplicate ORDER inside one
+    bucket's emission is irrelevant because every consumer applies
+    `.distinct()` (a set operation) first. Implementation: per input
     batch, gather indices = per-bucket np.triu_indices (cached per
     bucket size) offset by the bucket's start in the flattened values,
     then ONE pyarrow `take` per side and a vectorized less/if_else
@@ -1021,27 +897,23 @@ def _prefix_pairs_arrow(
     bk: DataFrame, threshold_num: int, threshold_den: int
 ) -> DataFrame:
     """prefix_filter_pairs' triangular pair explode + the two PPJoin
-    prunes, vectorized (r13, guide §4.2) — input is exactly one column,
-    the per-bucket sorted-distinct array of (i: id, n: set size,
-    p: prefix position) member structs; output is the PRUNE-SURVIVING
+    prunes, vectorized (guide §4.2) — input is exactly one column, the
+    per-bucket collect_list array of (i: id, n: set size, p: prefix
+    position) member structs; output is the PRUNE-SURVIVING
     (id_a, id_b) rows, id_a < id_b.
 
-    SET-IDENTICAL to the Column explode (`engine="column"`, the
-    differential reference): the pair universe is the triangular set
-    over the SAME members — the Column path sorts/dedupes via
-    array_sort(collect_set(...)) and emits by index order, this path
-    walks plain collect_list arrays and normalizes each emission to
-    (least, greatest) by the id field, dropping equal ids (see
-    _bucket_pairs for the multiset identity) — and both prunes are
-    the SAME integer arithmetic (symmetric under operand swap, so
-    pruning before the swap is sound) —
+    The pair universe is the triangular set over the bucket's members,
+    each emission normalized to (least, greatest) by the id field with
+    equal ids dropped (see _bucket_pairs for the multiset identity).
+    Both prunes are integer arithmetic, symmetric under operand swap
+    (so pruning before the swap is sound):
       length:     den·min(n_a,n_b) ≥ num·max(n_a,n_b)
       positional: (1 + min(n_a−p_a, n_b−p_b))·(num+den) ≥ num·(n_a+n_b)
     — evaluated in int64 (n, p are int32 set sizes/positions; num, den
-    are small ints, so no overflow on either engine). Per-occurrence
-    emission order differs only within a bucket, which the consumer's
-    `.distinct()` erases. Pinned differentially in
-    tests/test_r13_opt.py."""
+    are small ints, so no overflow). Per-occurrence emission order
+    differs only within a bucket, which the consumer's `.distinct()`
+    erases. Pinned differentially against the sorted-distinct Column
+    explode (tests/column_reference.py) in tests/test_r13_opt.py."""
     elem = bk.schema[bk.columns[0]].dataType.elementType["i"].dataType
     elem_s = elem.simpleString()
     schema = f"id_a {elem_s}, id_b {elem_s}"
@@ -1126,17 +998,16 @@ def embedding_block_candidates(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_bucket: int | None = 1000,
-    engine: str = "column",
 ) -> DataFrame:
     """Candidate pairs (a < b) sharing ≥1 hyperplane-LSH band bucket.
 
     `planes_bands` = n_bands bands of band_bits hyperplanes each; a pair
     is a candidate iff some band's full sign-signature matches. Same
     single-shuffle bucket-pair shape as `minhash_candidates`: signatures
-    are computed scan-side (one dot product per plane, pure Column
-    exprs), band keys explode, groupBy(band_key) collects each bucket,
-    pairs explode inside the bucket. Never a self-join, never a
-    cartesian.
+    are computed scan-side (one numpy matmul per Arrow batch,
+    `embedding_band_keys_arrow`), groupBy(band_key) collects each
+    bucket, pairs explode inside the bucket. Never a self-join, never a
+    cartesian. Null vectors are never candidates.
 
     Recall math (tune n_bands/band_bits to the threshold): P(two
     vectors at angle θ agree on one plane) = 1 - θ/π; a pair survives
@@ -1153,55 +1024,18 @@ def embedding_block_candidates(
     Compensate the recall loss of narrower buckets with more bands
     (miss formula above). `max_bucket` is the backstop, not the tuning
     knob: it bounds the b² straggler and drops are observable via
-    `overfull_lsh_buckets`.
-
-    `engine="arrow"` computes the signatures via numpy matmul
-    (`embedding_band_keys_arrow`) — required when auto-sized banding
-    yields hundreds of planes; "column" keeps the pure-Column path for
-    small plane counts and plan-assertion tests."""
-    if engine == "arrow":
-        return _bucket_pairs(
-            embedding_band_keys_arrow(df, planes_bands, vec_col, id_col),
-            id_col,
-            max_bucket,
-        )
-    # One flat literal array of all planes; bits computed in one pass,
-    # then sliced per band and packed into a long band signature.
-    flat = [p for band in planes_bands for p in band]
-    band_bits = len(planes_bands[0])
-    planes_arr = F.expr(
-        "array("
-        + ",".join("array(" + ",".join(str(float(x)) for x in p) + ")" for p in flat)
-        + ")"
+    `overfull_lsh_buckets`."""
+    return _bucket_pairs(
+        embedding_band_keys_arrow(df, planes_bands, vec_col, id_col),
+        id_col,
+        max_bucket,
     )
-    from parkour_spark.functions.vector import dot
-
-    bits = F.transform(
-        planes_arr,
-        lambda p: F.when(dot(F.col(vec_col), p) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"),
-    )
-    staged = df.select(F.col(id_col), bits.alias("__bits"))
-    keys = F.transform(
-        F.sequence(F.lit(0), F.lit(len(planes_bands) - 1)),
-        lambda i: F.concat_ws(
-            ":",
-            i,
-            F.aggregate(
-                F.slice("__bits", i * band_bits + 1, band_bits),
-                F.lit(0).cast("long"),
-                lambda acc, b: acc * 2 + b,
-            ),
-        ),
-    )
-    exploded = _explode_fast(staged, keys, "band_key", keep=[id_col])
-    return _bucket_pairs(exploded, id_col, max_bucket)
 
 
 def embedding_neardup_pairs(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", threshold: float = 0.95,
     block_planes: list[list[list[float]]] | None = None,
     max_bucket: int | None = 1000,
-    engine: str = "column",
 ) -> DataFrame:
     """Pairs with cosine ≥ threshold.
 
@@ -1219,7 +1053,7 @@ def embedding_neardup_pairs(
     # dot/(norm_a*norm_b) exactly as the oracle computes it).
     if block_planes is not None:
         cand = embedding_block_candidates(
-            df, block_planes, vec_col, id_col, max_bucket, engine
+            df, block_planes, vec_col, id_col, max_bucket
         ).persist()
         vecs = df.select(
             F.col(id_col), F.col(vec_col), norm(vec_col).alias("__n")
@@ -1279,9 +1113,7 @@ def embedding_neardup_pairs_auto(
     restores recall per the miss formula. `target_bucket=2` targets
     O(1) expected bucket occupancy for the non-duplicate bulk — true
     near-dup clusters still collide (that's the point) and bound pair
-    work by cluster size, not corpus size. Signatures run on the Arrow
-    path (numpy matmul) because the derived plane count is in the
-    hundreds.
+    work by cluster size, not corpus size.
 
     NOTE the intrinsic LSH economics (measured, r4): selectivity per
     extra bit is (2p)⁻¹ with p = 1 - θ/π, so the family only separates
@@ -1290,7 +1122,7 @@ def embedding_neardup_pairs_auto(
     98% of RANDOM pairs candidates at 20k rows (43M candidates, 58s).
     Use the exact path or a different family below ~0.7."""
     n = df.count()
-    dim = len(df.select(vec_col).first()[0])
+    dim = len(df.where(F.col(vec_col).isNotNull()).select(vec_col).first()[0])
     n_bands, band_bits = bands_for_corpus(
         n, threshold=threshold, target_bucket=target_bucket, target_miss=target_miss,
         max_band_bits=24,
@@ -1298,7 +1130,7 @@ def embedding_neardup_pairs_auto(
     planes = rademacher_bands(n_bands, band_bits, dim, seed)
     return embedding_neardup_pairs(
         df, vec_col, id_col, threshold,
-        block_planes=planes, max_bucket=max_bucket, engine="arrow",
+        block_planes=planes, max_bucket=max_bucket,
     )
 
 
@@ -1472,8 +1304,8 @@ def winnow_overlap_pairs(
 
     base = _parallelize_scan(df.select(F.col(id_col), F.col(text_col)))
     normed = base.select(F.col(id_col), normalize_text(text_col).alias("__nt"))
-    # fused kgram+winnow (r13): result-identical to kgram_hashes →
-    # winnow_pos_arrow → winnow_select — see winnow_text_arrow
+    # k-gram md5 hashing + winnowing in one Arrow pass — see
+    # winnow_text_arrow
     fps = winnow_text_arrow(normed, id_col, "__nt", k=k, w=w, out="__fps",
                             positions=False)
     ex = _explode_fast(fps, "__fps", "band_key", keep=[id_col])
@@ -1516,7 +1348,7 @@ def substring_overlap_spans(
     detect long verbatim shared substrings as RUNS of shared winnowing
     fingerprints at constant position offset.
 
-    Why it works: winnowing (functions.text.winnow_select_pos)
+    Why it works: winnowing (functions.text.winnow_text_arrow)
     guarantees every substring of length ≥ k+w-1 shares a selected
     fingerprint, and consecutive selected positions within a shared
     region differ by ≤ w. A verbatim shared substring between docs a
@@ -1625,9 +1457,8 @@ def _positioned_occurrences(
 ) -> DataFrame:
     """(id, fp, pos) winnowing-fingerprint occurrences of normalized
     text — the shared scan of the substring-dedup family (including
-    substring_overlap_spans). Winnowing runs vectorized (r12):
-    result-identical to the winnow_select_pos expression — see
-    winnow_pos_arrow."""
+    substring_overlap_spans). Winnowing runs vectorized — see
+    functions.text.winnow_text_arrow."""
     from parkour_spark.functions.text import (
         normalize_text,
         winnow_text_arrow,
@@ -1635,7 +1466,8 @@ def _positioned_occurrences(
 
     base = _parallelize_scan(df.select(F.col(id_col), F.col(text_col)))
     normed = base.select(F.col(id_col), normalize_text(text_col).alias("__nt"))
-    # fused kgram+winnow (r13) — see winnow_text_arrow
+    # k-gram md5 hashing + winnowing in one Arrow pass — see
+    # winnow_text_arrow
     fpp = winnow_text_arrow(normed, id_col, "__nt", k=k, w=w, out="__fpp")
     return _explode_fast(fpp, "__fpp", "__o", keep=[id_col]).select(
         F.col(id_col), F.col("__o.fp").alias("fp"), F.col("__o.pos").alias("pos")

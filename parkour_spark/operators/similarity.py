@@ -171,51 +171,22 @@ def hyperplane_signature(
     return df.withColumn(out_col, sig)
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]] | Column,
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine, ties to
-    the lowest centroid id).
-
-    `centroids` is a driver-side list of (cid, vector) — the coarse
-    quantizer. It is inlined as a literal array of structs, so assignment
-    is a single scan-side expression: no join, no shuffle, and at cluster
-    scale the centroid table rides along in the serialized plan exactly
-    like a broadcast. One cosine per (row, centroid), computed once:
-    scores = transform(centroids), argmax via array_max on (cos, -cid)
-    struct ordering."""
-    cent_arr = centroids if isinstance(centroids, Column) else _centroid_array(centroids)
-    staged = df.withColumn("__vn", norm(vec_col))
-    scores = F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            (dot(F.col(vec_col), c["v"]) / (F.col("__vn") * c["n"])).alias("cos"),
-            (-c["cid"]).alias("ncid"),
-        ),
-    )
-    return staged.withColumn(out_col, -F.array_max(scores)["ncid"]).drop("__vn")
-
-
 def ivf_assign_arrow(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     out_col: str = "cell",
 ) -> DataFrame:
-    """Arrow-batched NumPy twin of `ivf_assign` — same contract (nearest
-    centroid by cosine, ties to the lowest cid), same single-scan
-    no-shuffle shape, but the per-row scoring is one BLAS matmul per
-    Arrow batch instead of interpreted per-element lambda evaluation
-    (higher-order Column functions don't participate in whole-stage
-    codegen; measured ~4× slower per row than this path).
-
-    At 100 TB the assignment pass dominates IVF indexing cost, so this
-    is the scale path; `ivf_assign` remains the pure-JVM,
-    fold-order-exact variant. Ties break to the lowest cid by sorting
-    centroids and taking NumPy's first argmax."""
+    """Assign each vector to its nearest centroid (max cosine, ties to
+    the lowest centroid id) — one BLAS matmul per Arrow batch, a single
+    scan with no join and no shuffle; the centroid matrix rides along
+    in the task closure like a broadcast. At 100 TB the assignment pass
+    dominates IVF indexing cost. Higher-order Column lambdas do not
+    join whole-stage codegen and measured ~4× slower per row (the
+    Column formulation stays as a differential reference,
+    tests/column_reference.py). Ties break to the lowest cid by sorting
+    centroids and taking NumPy's first argmax. A NULL vector gets a
+    NULL `out_col`, so it matches no cell."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -231,10 +202,14 @@ def ivf_assign_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            S = (V @ C.T) / (np.linalg.norm(V, axis=1, keepdims=True) * Cn)
+            valid = pdf[vec_col].notna().to_numpy()
+            cell = pd.array([None] * len(pdf), dtype="Int64")
+            if valid.any():
+                V = np.stack(pdf[vec_col].to_numpy()[valid]).astype(np.float64)
+                S = (V @ C.T) / (np.linalg.norm(V, axis=1, keepdims=True) * Cn)
+                cell[valid] = cids[np.argmax(S, axis=1)]
             out = pdf.copy()
-            out[out_col] = cids[np.argmax(S, axis=1)]
+            out[out_col] = cell
             yield out
 
     return df.mapInPandas(assign, schema=schema)
@@ -250,7 +225,6 @@ def ivf_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    assign_engine: str = "arrow",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are assigned to inverted
     lists (cells) once; each query probes only its `nprobe` nearest
@@ -264,18 +238,12 @@ def ivf_topk(
     flow into the ranking window, whose partition key is query_id.
     Centroids here are caller-provided (deterministic seeds in the
     oracle-checked query; k-means output in a real deployment — same
-    plan either way). `assign_engine` defaults to "arrow" — the
-    BLAS-batched `ivf_assign_arrow` corpus assignment (the 100 TB path;
-    interpreted higher-order Column lambdas don't join whole-stage
-    codegen and measured ~4× slower per row). `assign_engine="column"`
-    keeps the pure-JVM fold-order-exact variant for oracle parity;
-    probe selection and candidate re-ranking stay Column-expression
-    either way."""
-    cent_arr = _centroid_array(centroids)  # parsed once, shared by both sides
-    if assign_engine == "arrow":
-        assigned = ivf_assign_arrow(widen_scan(corpus), centroids, corpus_vec, "cell")
-    else:
-        assigned = ivf_assign(widen_scan(corpus), cent_arr, corpus_vec, "cell")
+    plan either way). The corpus assignment is the BLAS-batched
+    `ivf_assign_arrow` (the 100 TB path); probe selection and candidate
+    re-ranking are Column expressions. Corpus rows with a NULL vector
+    get a NULL cell and are never probed."""
+    cent_arr = _centroid_array(centroids)  # probe-side scoring
+    assigned = ivf_assign_arrow(widen_scan(corpus), centroids, corpus_vec, "cell")
     c = assigned.withColumn("__cn", norm(corpus_vec))
     qn = norm(query_vec)
     scores = F.transform(
@@ -469,6 +437,7 @@ def ivf_index_delete(
     cells = sorted(
         int(r["cell"])
         for r in assigned.select("cell").distinct().collect()
+        if r["cell"] is not None  # a NULL vector is in no cell
     )
     if not cells:
         return
@@ -798,9 +767,9 @@ def max_cosine_vs_set(
     semantic benchmark decontamination — eval/benchmark sets are
     thousands of vectors at most, so they inline as a plan literal and
     the whole comparison rides the corpus scan (no join, no shuffle),
-    exactly like ivf_assign but keeping the score. For reference sets
-    too large to inline, the corpus side goes through the hyperplane-LSH
-    bucket join instead (embedding_neardup_pairs_auto)."""
+    a nearest-centroid assignment that keeps the score. For reference
+    sets too large to inline, the corpus side goes through the
+    hyperplane-LSH bucket join instead (embedding_neardup_pairs_auto)."""
     ref_arr = _centroid_array(refs)
     staged = df.withColumn("__vn", norm(vec_col))
     scores = F.transform(

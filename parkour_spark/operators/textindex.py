@@ -179,19 +179,29 @@ def _read_stats(spark, path: str) -> tuple[int, int]:
 
 
 def _stats_df(spark, path: str) -> DataFrame:
-    """The stats row as a 1-row LOCAL DataFrame (r13) — same values the
+    """The stats row as a 1-row LOCAL DataFrame — same values the
     parquet scan produced, without a file scan inside the probe plan
     (the read happens driver-side in _read_stats, per call).
 
-    A LocalRelation (createDataFrame), NOT literals: the scoring tail
-    divides n_total/n_docs, and foldable literals would let
-    ConstantFolding evaluate 0/0 at OPTIMIZATION time on a fully
-    emptied index (ANSI DIVIDE_BY_ZERO) — with attribute references,
-    exactly like the parquet scan, the division only runs for rows
-    that actually flow (none, when no posting survives)."""
+    Built from a pyarrow Table so it plans as a LocalTableScan; a
+    Python-list createDataFrame plans as `Scan ExistingRDD` and runs
+    Python-worker tasks on every probe. Attribute references, NOT
+    literals: the scoring tail divides n_total/n_docs, and foldable
+    literals would let ConstantFolding evaluate 0/0 at OPTIMIZATION
+    time on a fully emptied index (ANSI DIVIDE_BY_ZERO) — with
+    attribute references, exactly like the parquet scan, the division
+    only runs for rows that actually flow (none, when no posting
+    survives)."""
+    import pyarrow as pa
+
     n_docs, n_total = _read_stats(spark, path)
     return spark.createDataFrame(
-        [(n_docs, n_total)], "n_docs long, n_total long"
+        pa.table(
+            {
+                "n_docs": pa.array([n_docs], pa.int64()),
+                "n_total": pa.array([n_total], pa.int64()),
+            }
+        )
     )
 
 

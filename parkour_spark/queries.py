@@ -1760,10 +1760,9 @@ def q_lang_id_ngram(spark, sf_dir):
     """,
 )
 def q_winnow(spark, sf_dir):
-    """Winnowing fingerprints (functions.text.kgram_hashes +
-    winnow_select): k=8 char-gram rolling hashes, w=8 window minima,
-    exploded to (doc_id, fp) — substring-overlap detection becomes an
-    equi-join on fp."""
+    """Winnowing fingerprints (functions.text.winnow_text_arrow): k=8
+    char-gram md5 hashes, w=8 window minima, exploded to (doc_id, fp) —
+    substring-overlap detection becomes an equi-join on fp."""
     from parkour_spark.functions.text import (
         normalize_text,
         winnow_text_arrow,
@@ -1772,15 +1771,12 @@ def q_winnow(spark, sf_dir):
 
     docs = widen_scan(_t(spark, sf_dir, "documents"))
     normed = docs.select(F.col("doc_id"), normalize_text("text").alias("__nt"))
-    # fused kgram+winnow (r13): result-identical to kgram_hashes →
-    # winnow_pos_arrow (r12) → winnow_select — see winnow_text_arrow
+    # k-gram md5 hashing + winnowing in one Arrow pass — see
+    # winnow_text_arrow
     fps = winnow_text_arrow(normed, "doc_id", "__nt", k=8, w=8, out="__fps",
                             positions=False)
-    # explode_outer, NOT explode: plain explode adds a size(arr)>0 filter
-    # that predicate-pushdown rewrites below the staged projections,
-    # inlining the whole three-stage lambda pipeline into one giant
-    # Filter expression (compile explosion). The fp set is never empty,
-    # so the two are semantically identical here.
+    # explode_outer: the fp set is never empty, so it equals explode
+    # here without explode's extra size(arr)>0 filter.
     return fps.select("doc_id", F.explode_outer("__fps").alias("fp"))
 
 
@@ -2227,16 +2223,16 @@ def _ivf_centroids(spark, sf_dir):
     return _IVF_CENTS[sf_dir]
 
 
-def _ivf_query(spark, sf_dir, assign_engine):
+def _ivf_query(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     cents = _ivf_centroids(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.where(F.col("vec_id") >= 5)
-    return SIM.ivf_topk(
-        corpus, queries, cents, k=10, nprobe=4, assign_engine=assign_engine
-    ).select("query_id", "vec_id", "rank", "cos")
+    return SIM.ivf_topk(corpus, queries, cents, k=10, nprobe=4).select(
+        "query_id", "vec_id", "rank", "cos"
+    )
 
 
 @query("ivf_topk_cosine", _ivf_oracle())
@@ -2245,23 +2241,12 @@ def q_ivf(spark, sf_dir):
     the 100 TB scale path for similarity search. Corpus vectors are
     assigned to inverted lists scan-side (centroids inlined as literals —
     no join, no shuffle); queries probe their nprobe nearest cells via a
-    broadcast equi-join. Assignment uses the default Arrow/BLAS engine
-    (one NumPy matmul per batch — r2 verdict flipped this to default;
-    the interpreted-HOF column variant is ~1.6× slower). Centroids are
+    broadcast equi-join. Assignment is one NumPy matmul per Arrow
+    batch (similarity.ivf_assign_arrow). Centroids are
     deterministic seed vectors (vec_id 5..20) so DuckDB reproduces the
     identical result; a real deployment plugs k-means centroids into
     the same plan."""
-    return _ivf_query(spark, sf_dir, assign_engine="arrow")
-
-
-@query("ivf_topk_cosine_column", _ivf_oracle())
-def q_ivf_column(spark, sf_dir):
-    """Same IVF plan with the corpus assignment as a pure-JVM Column
-    expression (similarity.ivf_assign) — kept for fold-order-exact
-    oracle parity and zero-Python deployments. Same oracle as
-    ivf_topk_cosine: the result set is identical (assignment argmax and
-    candidate cosines agree; verified cross-engine, not assumed)."""
-    return _ivf_query(spark, sf_dir, assign_engine="column")
+    return _ivf_query(spark, sf_dir)
 
 
 # ===========================================================================
@@ -11327,9 +11312,9 @@ def q_ivf_recall(spark, sf_dir):
     exact = SIM.brute_force_topk(corpus, queries, k=10).select(
         "query_id", "vec_id"
     )
-    approx = SIM.ivf_topk(
-        corpus, queries, cents, k=10, nprobe=4, assign_engine="arrow"
-    ).select("query_id", "vec_id", F.lit(1).alias("__hit"))
+    approx = SIM.ivf_topk(corpus, queries, cents, k=10, nprobe=4).select(
+        "query_id", "vec_id", F.lit(1).alias("__hit")
+    )
     return (
         exact.join(approx, ["query_id", "vec_id"], "left")
         .groupBy("query_id")

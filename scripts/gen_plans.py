@@ -21,8 +21,7 @@ COMMENTARY = {
     "range_join_quantity_bands": "Bucketized interval join: the interval side explodes to buckets and broadcasts; the residual range predicate filters after an equi-join — never BroadcastNestedLoop over lineitem.",
     "dedup_minhash_lsh": "Signature computation rides the scan (projections only); the single wide Exchange is the band-bucket groupBy; verification joins only candidate docs.",
     "knn_cosine": "Query set broadcasts; corpus scans once. The only Exchange is the per-query ranking window, keyed by query_id.",
-    "ivf_topk_cosine": "Centroid assignment is a scan-side projection (centroids inlined as literals); probes broadcast into an equi-join on cell — only probed-cell rows are scored. Vector norms are computed once per row, never per pair.",
-    "ivf_topk_cosine_column": "Same plan with the assignment scan as a pure-JVM Column expression (interpreted HOF lambdas) — fold-order-exact oracle-parity variant; the default ivf_topk_cosine uses the Arrow/BLAS assignment (MapInPandas matmul), the throughput path for the pass that dominates IVF indexing.",
+    "ivf_topk_cosine": "Centroid assignment rides the scan as one MapInPandas BLAS matmul per Arrow batch (similarity.ivf_assign_arrow); probes broadcast into an equi-join on cell — only probed-cell rows are scored. Vector norms are computed once per row, never per pair.",
     "salted_join_agg": "Skew-aware: a sampled key-frequency pre-pass (key columns projected before Sample, so the probe scan is single-column) detects hot keys; with none — the common case — the executed plan IS the plain join, no salt column, no replication. Forced-hot plans split hot/cold with the hot branch keyed on (l_orderkey, salt).",
     "matrixify": "Partial aggregation on integer keys precedes the broadcast name joins — the fact table never flows through a join; the two dimension zip_with_index builds (range sort + per-partition counts) run as overlapping jobs.",
     "embedding_neardup_blocked": "Hyperplane-LSH band buckets generate candidates through a single groupBy(band_key) shuffle and in-bucket pair explode — an equi-join plan end to end; exact cosine re-checks candidates only. No BroadcastNestedLoopJoin anywhere. r4: banding is DERIVED from corpus count (bands_for_corpus — band bits ~ log2(n) hold random-bucket occupancy constant, bands restore the recall target) and signatures are one numpy matmul per Arrow batch; the fixed 64x4 banding this replaces made 98% of random pairs candidates at 20k rows (87s -> 12.6s at the sf1 soak).",
@@ -40,7 +39,7 @@ COMMENTARY = {
     "incremental_hourly_rollup": "Two state sketches (history, batch) each partial-agg before their exchange; the merge is a union + re-reduce over STATE ROWS only. In production the history state is a persisted table and only the batch side executes — the plan shows why the merge cost is O(state), not O(corpus).",
     "triangle_counts_dedup_graph": "Degree-ordered orientation bounds wedge fan-out by ~sqrt(2m); the oriented edge list is cached (it feeds both wedge sides and the closing semi-join — without the cache the MinHash pair derivation upstream executes three times, measured 1.5x). Wedges close via LeftSemi on the (b,c) edge set.",
     "key_skew_profile": "One partial-agg'd count shuffle over the key; totals are a 1-row broadcast over the key-sized count table; top-n runs as TakeOrderedAndProject. The ratios are exact integer division (div), never float.",
-    "substring_dedup_spans": "Suffix-array-free exact-substring detection: positioned winnowing fingerprints compute on the scan — k-gram md5s as JVM projections, then the window-min selection as ONE vectorized sliding-window pass (winnow_pos_arrow mapInArrow, r12: the HOF expression form re-sliced each window 3x and re-scanned it for the min twice — ~22 task-CPU-s); ONE groupBy(fp) shuffle builds df-capped occurrence buckets; in-bucket triangular pairs explode via explode_fast; run segmentation is a lag+sum window partitioned by (id_a, id_b, delta). No global sort, no cartesian, fan-out bounded by the df cap.",
+    "substring_dedup_spans": "Suffix-array-free exact-substring detection: positioned winnowing fingerprints compute on the scan — k-gram md5 hashing and the window-min selection run as ONE vectorized mapInArrow pass over the normalized text (winnow_text_arrow; the HOF expression form re-sliced each window 3x and re-scanned it for the min twice — ~22 task-CPU-s); ONE groupBy(fp) shuffle builds df-capped occurrence buckets; in-bucket triangular pairs explode via explode_fast; run segmentation is a lag+sum window partitioned by (id_a, id_b, delta). No global sort, no cartesian, fan-out bounded by the df cap.",
     "substring_spans_delta": "Ingest shape: the corpus side's positioned-fingerprint index builds with ONE groupBy(fp) (persisted in production); the batch probes it by equi-join on fp — no corpus self-pairs, fan-out bounded by the df cap; the same single-sort window segments runs per (id_new, id_old, delta).",
     "substring_dedup_clean": "Apply half: span intervals merge per doc via the gaps-and-islands window (one shuffle on the flagged-doc id), the cut is a pure Column fold over the merged interval array, and cleaned fingerprints join back to the corpus on the doc id. Only flagged docs carry interval state; unflagged docs stream through the left join untouched.",
     "q8_market_share": "TPC-H Q8 adapted: the selective p_type filter prunes the part build side BEFORE it broadcasts into the lineitem scan; customer/supplier nation decodes and the region gate are broadcast joins; the one wide exchange is orders-lineitem (AQE broadcasts it at small sf). Market share divides two exact integer-cent sums - deterministic at any parallelism.",

@@ -204,6 +204,21 @@ def test_delete_audit_verifies_removal(spark, corpus, tmp_path):
     assert ids_remaining(spark, idx + "/postings", "doc_id", victims) == []
 
 
+def test_stats_frame_is_local_table_scan(spark, corpus, tmp_path):
+    """The probe's one-row stats frame is a LocalTableScan, not an RDD
+    scan of a Python list (which runs Python-worker tasks per probe)."""
+    from parkour_spark.operators.textindex import _stats_df
+
+    idx = str(tmp_path / "idx")
+    text_index_build(corpus, idx, n_buckets=4)
+    st = _stats_df(spark, idx)
+    plan = st._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert [tuple(r) for r in st.collect()] == [
+        tuple(spark.read.parquet(idx + "/stats").select("n_docs", "n_total").first())
+    ]
+
+
 def test_zero_postings_corpus_probes_empty(spark, tmp_path):
     """A corpus of only empty/whitespace docs builds an index with
     ZERO postings rows (hypothesis-found: the partitioned write leaves

@@ -125,48 +125,42 @@ def test_lpa_argmax_matches_window_semantics(spark):
 
 
 def test_winnow_arrow_matches_expression(spark):
-    """winnow_pos_arrow (r12) must be element-identical to the
-    winnow_select_pos / winnow_select expressions — including short
-    arrays (n <= w), duplicate window minima (first-occurrence tie), a
-    null gram array, and the value-distinct ordering of the
-    positions=False variant."""
+    """The vectorized winnow core must be element-identical to the
+    winnow_select_pos / winnow_select expressions over kgram_hashes —
+    including short rows (n <= w), duplicate window minima
+    (first-occurrence tie: a two-letter alphabet with k=2 repeats grams
+    constantly), null and empty text, and the value-distinct ordering
+    of the positions=False variant."""
     import random
 
+    from column_reference import kgram_hashes, winnow_select, winnow_select_pos
     from pyspark.sql import functions as F
 
-    from parkour_spark.functions.text import (
-        winnow_pos_arrow,
-        winnow_select,
-        winnow_select_pos,
-    )
+    from parkour_spark.functions.text import winnow_text_arrow
 
     rng = random.Random(7)
-    rows = [
-        (0, [5]),
-        (1, [3, 3, 3]),
-        (2, list(range(20, 0, -1))),
-        (3, None),
-        (99, []),
-    ]
+    rows = [(0, "a"), (1, "aaaa"), (2, "abcdefghijklmnopqrstu"), (3, None), (99, "")]
     for i in range(4, 40):
         n = rng.randint(1, 60)
-        rows.append((i, [rng.randint(0, 9) for _ in range(n)]))  # many ties
-    df = spark.createDataFrame(rows, "doc_id long, g array<long>")
+        rows.append((i, "".join(rng.choice("ab") for _ in range(n))))  # many ties
+    df = spark.createDataFrame(rows, "doc_id long, t string")
+    k = 2
+    grams = df.select("doc_id", kgram_hashes("t", k=k).alias("g"))
     for w in (3, 8):
-        expr_pos = df.select(
+        expr_pos = grams.select(
             "doc_id", F.to_json(winnow_select_pos(F.col("g"), w=w)).alias("j")
         ).collect()
-        arrow_pos = winnow_pos_arrow(df, "doc_id", "g", w=w, out="f").select(
+        arrow_pos = winnow_text_arrow(df, "doc_id", "t", k=k, w=w, out="f").select(
             "doc_id", F.to_json("f").alias("j")
         ).collect()
         assert sorted((r.doc_id, r.j) for r in expr_pos) == sorted(
             (r.doc_id, r.j) for r in arrow_pos
         ), f"positions variant diverged at w={w}"
-        expr_val = df.select(
+        expr_val = grams.select(
             "doc_id", F.to_json(winnow_select(F.col("g"), w=w)).alias("j")
         ).collect()
-        arrow_val = winnow_pos_arrow(
-            df, "doc_id", "g", w=w, out="f", positions=False
+        arrow_val = winnow_text_arrow(
+            df, "doc_id", "t", k=k, w=w, out="f", positions=False
         ).select("doc_id", F.to_json("f").alias("j")).collect()
         assert sorted((r.doc_id, r.j) for r in expr_val) == sorted(
             (r.doc_id, r.j) for r in arrow_val

@@ -1,8 +1,8 @@
 """Round-13 optimization equivalence pins.
 
 Every r13 rewrite must be RESULT-IDENTICAL; each test pins one rewrite
-differentially against the pre-r13 formulation (kept in the code as the
-reference path) or a brute-force replica."""
+differentially against the pre-r13 formulation (kept as a pure-Column
+reference in tests/column_reference.py) or a brute-force replica."""
 
 from pyspark.sql import functions as F
 
@@ -28,6 +28,8 @@ def test_minhash_arrow_equals_column_edges(spark):
     """The mapInArrow signature path (r13) is value-identical to the
     Column expression path on every edge class, incl. the empty-array
     (sig = P) and null-array (sig = null) contracts."""
+    from column_reference import minhash_signature_column
+
     from parkour_spark.operators.dedup import minhash_signature
 
     df = _docs(spark, EDGE_TEXTS)
@@ -35,13 +37,13 @@ def test_minhash_arrow_equals_column_edges(spark):
         a = [
             r.asDict()
             for r in minhash_signature(
-                df, "text", "doc_id", 12, ngram_n, engine="arrow"
+                df, "text", "doc_id", 12, ngram_n
             ).orderBy("doc_id").collect()
         ]
         c = [
             r.asDict()
-            for r in minhash_signature(
-                df, "text", "doc_id", 12, ngram_n, engine="column"
+            for r in minhash_signature_column(
+                df, "text", "doc_id", 12, ngram_n
             ).orderBy("doc_id").collect()
         ]
         assert a == c
@@ -49,6 +51,8 @@ def test_minhash_arrow_equals_column_edges(spark):
 
 def test_minhash_arrow_equals_column_random(spark):
     import random
+
+    from column_reference import minhash_signature_column
 
     from parkour_spark.operators.dedup import minhash_signature
 
@@ -59,25 +63,19 @@ def test_minhash_arrow_equals_column_random(spark):
         for i in range(300)
     ]
     df = _docs(spark, rows)
-    a = minhash_signature(df, engine="arrow").orderBy("doc_id").collect()
-    c = minhash_signature(df, engine="column").orderBy("doc_id").collect()
+    a = minhash_signature(df).orderBy("doc_id").collect()
+    c = minhash_signature_column(df).orderBy("doc_id").collect()
     assert a == c
 
 
-def test_winnow_text_arrow_three_way(spark):
-    """winnow_text_arrow (fused kgram+winnow, r13) ≡ kgram_hashes →
-    winnow_pos_arrow (r12) ≡ the winnow_select/_pos expressions, on
-    edge classes, both variants, two (k, w) settings — including the
-    null-text row, where r13 also aligned winnow_pos_arrow's [null]
-    gram handling with the expression semantics."""
-    from parkour_spark.functions.text import (
-        kgram_hashes,
-        normalize_text,
-        winnow_pos_arrow,
-        winnow_select,
-        winnow_select_pos,
-        winnow_text_arrow,
-    )
+def test_winnow_text_arrow_equals_expression(spark):
+    """winnow_text_arrow (k-gram md5 + winnow in one Arrow pass) ≡ the
+    kgram_hashes → winnow_select/_pos Column expressions, on edge
+    classes, both variants, two (k, w) settings — including the
+    null-text row (one null-valued element)."""
+    from column_reference import kgram_hashes, winnow_select, winnow_select_pos
+
+    from parkour_spark.functions.text import normalize_text, winnow_text_arrow
 
     df = _docs(spark, EDGE_TEXTS)
     normed = df.select("doc_id", normalize_text("text").alias("__nt"))
@@ -86,9 +84,6 @@ def test_winnow_text_arrow_three_way(spark):
             grams = normed.select(
                 "doc_id", kgram_hashes("__nt", k=k).alias("__g")
             )
-            staged = winnow_pos_arrow(
-                grams, "doc_id", "__g", w=w, out="o", positions=positions
-            ).select("doc_id", F.to_json("o").alias("j")).orderBy("doc_id")
             fused = winnow_text_arrow(
                 normed, "doc_id", "__nt", k=k, w=w, out="o",
                 positions=positions,
@@ -101,7 +96,7 @@ def test_winnow_text_arrow_three_way(spark):
             ref = grams.select(
                 "doc_id", F.to_json(expr).alias("j")
             ).orderBy("doc_id")
-            assert fused.collect() == staged.collect() == ref.collect()
+            assert fused.collect() == ref.collect()
 
 
 def test_prefix_filter_agg_prefix_equals_bruteforce(spark):
@@ -207,6 +202,8 @@ def test_bucket_pairs_arrow_equals_column(spark):
     random buckets, long AND string ids, capped and uncapped."""
     import random
 
+    from column_reference import bucket_pairs_column
+
     from parkour_spark.operators.dedup import _bucket_pairs
 
     rng = random.Random(41)
@@ -215,7 +212,7 @@ def test_bucket_pairs_arrow_equals_column(spark):
     ]
     # the _bucket_pairs contract: callers feed UNIQUE (id, band_key)
     # rows (all real callers do by construction) — required for the
-    # max_bucket size test to agree across engines
+    # max_bucket size test to agree with the reference
     rows = sorted(set(raw))
     df = spark.createDataFrame(rows, "doc_id long, band_key string")
     sdf = spark.createDataFrame(
@@ -225,15 +222,11 @@ def test_bucket_pairs_arrow_equals_column(spark):
         for cap in (None, 12):
             a = {
                 (r.id_a, r.id_b)
-                for r in _bucket_pairs(
-                    frame, "doc_id", cap, engine="arrow"
-                ).collect()
+                for r in _bucket_pairs(frame, "doc_id", cap).collect()
             }
             c = {
                 (r.id_a, r.id_b)
-                for r in _bucket_pairs(
-                    frame, "doc_id", cap, engine="column"
-                ).collect()
+                for r in bucket_pairs_column(frame, "doc_id", cap).collect()
             }
             assert a == c and all(x < y for x, y in a)
     # uncapped, WITH duplicate rows: the (least, greatest) + equal-id
@@ -242,11 +235,11 @@ def test_bucket_pairs_arrow_equals_column(spark):
     dup = spark.createDataFrame(raw, "doc_id long, band_key string")
     a = {
         (r.id_a, r.id_b)
-        for r in _bucket_pairs(dup, "doc_id", None, engine="arrow").collect()
+        for r in _bucket_pairs(dup, "doc_id", None).collect()
     }
     c = {
         (r.id_a, r.id_b)
-        for r in _bucket_pairs(dup, "doc_id", None, engine="column").collect()
+        for r in bucket_pairs_column(dup, "doc_id", None).collect()
     }
     assert a == c and all(x < y for x, y in a)
 
@@ -261,7 +254,7 @@ def test_bucket_pairs_arrow_flush_path(spark):
     df = spark.createDataFrame(
         [(i, "k") for i in range(n)], "doc_id long, band_key string"
     )
-    pairs = _bucket_pairs(df, "doc_id", None, engine="arrow")
+    pairs = _bucket_pairs(df, "doc_id", None)
     assert pairs.count() == n * (n - 1) // 2
     lo = pairs.orderBy("id_a", "id_b").limit(1).collect()[0]
     assert (lo.id_a, lo.id_b) == (0, 1)
@@ -269,9 +262,11 @@ def test_bucket_pairs_arrow_flush_path(spark):
 
 def test_prefix_pairs_arrow_equals_column(spark):
     """prefix_filter_pairs' vectorized pair explode + PPJoin prunes
-    (r13) is end-to-end identical to the Column engine — same verified
+    (r13) is end-to-end identical to the Column explode — same verified
     pairs AND scores — on a boilerplate-heavy corpus, two thresholds."""
     import random
+
+    from column_reference import prefix_filter_pairs_column
 
     from parkour_spark.operators.dedup import prefix_filter_pairs
 
@@ -286,13 +281,13 @@ def test_prefix_pairs_arrow_equals_column(spark):
         a = sorted(
             (r.id_a, r.id_b, r.jaccard)
             for r in prefix_filter_pairs(
-                df, threshold_num=tn, threshold_den=td, engine="arrow"
+                df, threshold_num=tn, threshold_den=td
             ).collect()
         )
         c = sorted(
             (r.id_a, r.id_b, r.jaccard)
-            for r in prefix_filter_pairs(
-                df, threshold_num=tn, threshold_den=td, engine="column"
+            for r in prefix_filter_pairs_column(
+                df, threshold_num=tn, threshold_den=td
             ).collect()
         )
         assert a == c and a

@@ -126,11 +126,13 @@ def test_stream_join_tight_watermark_bounds_state(spark, tmp_path):
 
 
 def test_arrow_band_keys_agree_with_column_candidates(spark):
-    """engine="arrow" (numpy matmul signatures) and engine="column"
-    (Catalyst HOF signatures) produce the SAME candidate pair set for
+    """The numpy matmul signatures and the Catalyst HOF signatures
+    (tests/column_reference.py) produce the SAME candidate pair set for
     the same planes — the key packing differs (long vs string) but the
     bucket partition of the corpus is identical."""
     import random
+
+    from column_reference import embedding_block_candidates_column
 
     rng = random.Random(11)
     rows = []
@@ -143,11 +145,11 @@ def test_arrow_band_keys_agree_with_column_candidates(spark):
     planes = D.rademacher_bands(n_bands=12, band_bits=5, dim=8)
     col_pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.embedding_block_candidates(df, planes, engine="column").collect()
+        for r in embedding_block_candidates_column(df, planes).collect()
     }
     arrow_pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.embedding_block_candidates(df, planes, engine="arrow").collect()
+        for r in D.embedding_block_candidates(df, planes).collect()
     }
     assert arrow_pairs == col_pairs and len(col_pairs) > 0
 

@@ -88,12 +88,10 @@ def test_embedding_auto_banding_linear_at_sf1(spark, soak_docs):
         n, threshold=0.9, target_bucket=2, target_miss=1e-4, max_band_bits=24
     )
     planes = D.rademacher_bands(n_bands, band_bits, dim)
-    cand = D.embedding_block_candidates(corpus, planes, engine="arrow")
+    cand = D.embedding_block_candidates(corpus, planes)
     n_cand = cand.count()
     assert n_cand <= 0.01 * n * (n - 1) / 2, n_cand
-    pairs = D.embedding_neardup_pairs(
-        corpus, threshold=0.9, block_planes=planes, engine="arrow"
-    )
+    pairs = D.embedding_neardup_pairs(corpus, threshold=0.9, block_planes=planes)
     assert pairs.count() >= n // 2  # one planted copy-pair per original
 
 

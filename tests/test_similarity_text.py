@@ -3,13 +3,16 @@
 from pyspark.sql import functions as F
 
 from parkour_spark.functions.text import (
-    kgram_hashes,
     langid_ngram,
     normalize_text,
     subword_count,
-    winnow_select,
+    winnow_text_arrow,
 )
-from parkour_spark.operators.similarity import brute_force_topk, ivf_assign, ivf_topk
+from parkour_spark.operators.similarity import (
+    brute_force_topk,
+    ivf_assign_arrow,
+    ivf_topk,
+)
 
 
 def _vecs(spark):
@@ -25,7 +28,7 @@ def _vecs(spark):
 def test_ivf_assign_nearest_centroid(spark):
     df = _vecs(spark)
     cents = [(0, [1.0, 0.0]), (1, [-1.0, 0.0])]
-    got = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents).collect()}
+    got = {r["vec_id"]: r["cell"] for r in ivf_assign_arrow(df, cents).collect()}
     for vid, cell in got.items():
         expect = 0 if vid in (0, 1, 10, 11, 14) else 1
         assert cell == expect, (vid, cell)
@@ -81,8 +84,8 @@ def test_winnow_shared_substring_shares_fingerprint(spark):
         ["doc_id", "text"],
     )
     normed = df.select("doc_id", normalize_text("text").alias("nt"))
-    grams = normed.select("doc_id", kgram_hashes("nt", k=8).alias("g"))
-    fps = grams.select("doc_id", winnow_select(F.col("g"), w=8).alias("fps"))
+    fps = winnow_text_arrow(normed, "doc_id", "nt", k=8, w=8, out="fps",
+                            positions=False)
     rows = {r["doc_id"]: set(r["fps"]) for r in fps.collect()}
     assert rows[1] & rows[2], "docs sharing a long substring must share fingerprints"
 
@@ -90,8 +93,8 @@ def test_winnow_shared_substring_shares_fingerprint(spark):
 def test_winnow_short_doc_single_window(spark):
     df = spark.createDataFrame([(1, "tiny")], ["doc_id", "text"])
     normed = df.select("doc_id", normalize_text("text").alias("nt"))
-    grams = normed.select("doc_id", kgram_hashes("nt", k=8).alias("g"))
-    fps = grams.select("doc_id", winnow_select(F.col("g"), w=8).alias("fps"))
+    fps = winnow_text_arrow(normed, "doc_id", "nt", k=8, w=8, out="fps",
+                            positions=False)
     assert len(fps.first()["fps"]) == 1
 
 
