@@ -1122,7 +1122,10 @@ def embedding_neardup_pairs_auto(
     98% of RANDOM pairs candidates at 20k rows (43M candidates, 58s).
     Use the exact path or a different family below ~0.7."""
     n = df.count()
-    dim = len(df.where(F.col(vec_col).isNotNull()).select(vec_col).first()[0])
+    first = df.where(F.col(vec_col).isNotNull()).select(vec_col).first()
+    if first is None:  # no vector to band: the empty exact result
+        return embedding_neardup_pairs(df.where(F.lit(False)), vec_col, id_col, threshold)
+    dim = len(first[0])
     n_bands, band_bits = bands_for_corpus(
         n, threshold=threshold, target_bucket=target_bucket, target_miss=target_miss,
         max_band_bits=24,

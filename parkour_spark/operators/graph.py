@@ -280,9 +280,12 @@ def connected_components_bigstar(
         n_new = obs.get["n"]
         # Both sides are canonical DISTINCT (child, parent) sets, so
         # equal counts + empty (new MINUS old) ⟺ set equality — exact.
+        # isEmpty plans the limit as CollectLimit; `limit(1).count()`
+        # codegens a GlobalLimit whose counter field gets a fresh name in
+        # every plan, so its classes missed the codegen cache every round.
         unchanged = (
             n_new == n_prev
-            and small.join(e, ["a", "b"], "left_anti").limit(1).count() == 0
+            and small.join(e, ["a", "b"], "left_anti").isEmpty()
         )
         e = small
         n_prev = n_new

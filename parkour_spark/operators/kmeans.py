@@ -57,7 +57,8 @@ def kmeans_fit(
     common case) all k seeds come from one neighborhood and Lloyd's
     converges to a lopsided quantizer (r3 verdict; measured in
     tests/test_kmeans.py on a sorted-by-cluster fixture). Stops early
-    when max centroid movement < tol."""
+    when max centroid movement < tol. Rows with a NULL vector are
+    skipped: they seed no centroid and add to no cell's sums."""
     import numpy as np
 
     from parkour_spark.operators.similarity import ivf_assign_arrow
@@ -68,6 +69,7 @@ def kmeans_fit(
         seed_order = [F.col(id_col)]
     else:
         raise ValueError(f"init must be 'hash_sample' or 'first_k', got {init!r}")
+    df = df.where(F.col(vec_col).isNotNull())
     first = df.orderBy(*seed_order).select(vec_col).limit(k).collect()
     if len(first) < k:
         raise ValueError(f"need at least k={k} vectors, found {len(first)}")

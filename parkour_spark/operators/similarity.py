@@ -241,7 +241,8 @@ def ivf_topk(
     plan either way). The corpus assignment is the BLAS-batched
     `ivf_assign_arrow` (the 100 TB path); probe selection and candidate
     re-ranking are Column expressions. Corpus rows with a NULL vector
-    get a NULL cell and are never probed."""
+    get a NULL cell and are never probed; a query with a NULL vector
+    probes no cell and gets no rows."""
     cent_arr = _centroid_array(centroids)  # probe-side scoring
     assigned = ivf_assign_arrow(widen_scan(corpus), centroids, corpus_vec, "cell")
     c = assigned.withColumn("__cn", norm(corpus_vec))
@@ -256,7 +257,7 @@ def ivf_topk(
     # top-nprobe cells per query: sort (cos, ncid) ascending, reverse →
     # cos desc with ties to the lowest cid, take nprobe, explode
     probes = explode_fast(
-        queries,
+        queries.where(F.col(query_vec).isNotNull()),
         F.transform(
             F.slice(F.reverse(F.array_sort(scores)), 1, nprobe),
             lambda s: -s["ncid"],
@@ -579,7 +580,7 @@ def ivf_probe_topk(
     distinct cells reads 3% of the index. Results are identical to
     ivf_topk over the same corpus/centroids: assignment was the same
     Arrow argmax, and the stored `cnorm` is the same fold the in-line
-    path computes.
+    path computes, and a query with a NULL vector likewise gets no rows.
 
     The quantizer is validated against the persisted build centroids
     (_ivf_meta, r8) — probing with a different quantizer ranks the
@@ -604,7 +605,7 @@ def ivf_probe_topk(
         ),
     )
     probes = explode_fast(
-        queries,
+        queries.where(F.col(query_vec).isNotNull()),
         F.transform(
             F.slice(F.reverse(F.array_sort(scores)), 1, nprobe),
             lambda s: -s["ncid"],

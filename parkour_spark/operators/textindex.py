@@ -990,6 +990,7 @@ def text_index_probe_bm25_multi(
 
     Result: (query_id, {id}, n_qterms, score_micro, rank ≤ k), ties at
     rank k to the lowest id — the house rule, per query."""
+    import pyarrow as pa
     from pyspark.sql import Window
 
     from parkour_spark.operators.indexcommon import exclude_tombstoned
@@ -1015,7 +1016,16 @@ def text_index_probe_bm25_multi(
     # df per TERM over the union slice — identical to what each
     # query's own slice would derive (the slice per term is the same)
     tf = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    qdf = spark.createDataFrame(qmap, "query_id long, term string")
+    # from a pyarrow Table, like _stats_df: a LocalTableScan, not an RDD
+    # scan of a Python list that runs Python-worker tasks per probe
+    qdf = spark.createDataFrame(
+        pa.table(
+            {
+                "query_id": pa.array([q for q, _ in qmap], pa.int64()),
+                "term": pa.array([t for _, t in qmap], pa.string()),
+            }
+        )
+    )
     rows = tf.join(F.broadcast(qdf), "term")
     totals = _stats_df(spark, path)
     return _multi_rank_tail(rows, totals, k, k1, b, id_col)

@@ -17,6 +17,24 @@ Design notes for 100 TB scale (rationale, judge-visible):
   not rows.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   engines (DuckDB oracle comparisons, cross-cluster reproducibility).
+- Codegen cache sized to the plan working set
+  (`spark.sql.codegen.cache.maxEntries` = 1000; Spark's default is 100).
+  The cache keys each generated class by its source and the compiling
+  thread's class loader, so in local mode a whole-stage class is
+  compiled twice (driver planning, executor task) and holds two entries.
+  Measured per-pass working sets on 4 cores: perfbench `mapreduce_etl`
+  63 classes, which fit the default; perfbench `llm_dedup` ~250-290, so
+  at 100 entries every class was evicted before the next pass needed it
+  and janino recompiled ~220-260 classes a pass, which C1/C2 then
+  JIT-compiled again; `bench.py`'s 46 entries ~910. The value stays
+  bounded because every entry keeps a loaded class in Metaspace; at 1000
+  a whole `llm_dedup` run ended with Metaspace and CodeHeap within 4 MB
+  of the default's. It is a static conf, fixed when the JVM's first
+  session starts; `extra_conf` can still override it. Read the compile
+  count over py4j as
+  `spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+  .METRIC_COMPILATION_TIME().getCount()` (one per janino compile; the
+  histogram holds each compile's time).
 """
 
 from __future__ import annotations
@@ -57,6 +75,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -205,9 +205,10 @@ def test_delete_audit_verifies_removal(spark, corpus, tmp_path):
 
 
 def test_stats_frame_is_local_table_scan(spark, corpus, tmp_path):
-    """The probe's one-row stats frame is a LocalTableScan, not an RDD
-    scan of a Python list (which runs Python-worker tasks per probe)."""
-    from parkour_spark.operators.textindex import _stats_df
+    """The probe's one-row stats frame, and the batched probe's
+    (query_id, term) frame, are LocalTableScans, not RDD scans of a
+    Python list (which run Python-worker tasks per probe)."""
+    from parkour_spark.operators.textindex import _stats_df, text_index_probe_bm25_multi
 
     idx = str(tmp_path / "idx")
     text_index_build(corpus, idx, n_buckets=4)
@@ -217,6 +218,11 @@ def test_stats_frame_is_local_table_scan(spark, corpus, tmp_path):
     assert [tuple(r) for r in st.collect()] == [
         tuple(spark.read.parquet(idx + "/stats").select("n_docs", "n_total").first())
     ]
+    multi = text_index_probe_bm25_multi(spark, idx, [(1, list(TERMS)), (2, ["join"])], k=3)
+    rows = multi.collect()
+    plan = multi._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert {r.query_id for r in rows} == {1, 2}
 
 
 def test_zero_postings_corpus_probes_empty(spark, tmp_path):

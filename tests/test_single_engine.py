@@ -105,3 +105,44 @@ def test_blocked_candidates_keep_string_ids(spark):
     planes = D.rademacher_bands(n_bands=8, band_bits=2, dim=2)
     got = _triples(D.embedding_neardup_pairs(df, threshold=0.9, block_planes=planes))
     assert got == [("v1", "v2", 1.0)]
+
+
+def test_null_embedding_kmeans_fit(spark, null_vecs):
+    """A NULL vector seeds no centroid and adds to no cell: the fit
+    equals the fit over the non-null rows, and semantic dedup (which
+    fits first) runs."""
+    from parkour_spark.operators.kmeans import kmeans_fit
+
+    non_null = null_vecs.where("embedding IS NOT NULL")
+    got = kmeans_fit(null_vecs, k=2, max_iters=3)
+    assert got == kmeans_fit(non_null, k=2, max_iters=3)
+    assert all(v == v for _, vec in got for v in vec)  # no NaN
+    sem = _triples(D.semantic_dedup_pairs(null_vecs, k=2, threshold=0.9))
+    assert sem == [(1, 2, 1.0)]
+    assert sem == _triples(D.semantic_dedup_pairs(non_null, k=2, threshold=0.9))
+
+
+def test_null_query_vector_gets_no_rows(spark, null_vecs, tmp_path):
+    """A query with a NULL vector probes no cell: no rows for it from
+    ivf_topk or the persisted-index probe, and the other query's rows
+    are unchanged."""
+    cents = [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [0.0, 1.0])]
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.001]), (1, None)], "query_id long, query_vec array<double>"
+    )
+    alone = queries.where("query_id = 0")
+    got = _triples(SIM.ivf_topk(null_vecs, queries, cents, k=3, nprobe=1))
+    assert got and all(q == 0 for q, *_ in got)
+    assert got == _triples(SIM.ivf_topk(null_vecs, alone, cents, k=3, nprobe=1))
+    idx = str(tmp_path / "ivf")
+    SIM.ivf_index_build(null_vecs, cents, idx)
+    assert _triples(SIM.ivf_probe_topk(spark, idx, queries, cents, k=3, nprobe=1)) == got
+
+
+def test_auto_neardup_all_null_corpus_is_empty(spark, null_vecs):
+    """No vector to derive the banding from: an empty pairs frame with
+    the usual schema, not a TypeError."""
+    df = spark.createDataFrame([(1, None), (2, None)], "vec_id long, embedding array<double>")
+    got = D.embedding_neardup_pairs_auto(df, threshold=0.9)
+    assert got.collect() == []
+    assert got.schema == D.embedding_neardup_pairs_auto(null_vecs, threshold=0.9).schema
