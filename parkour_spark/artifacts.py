@@ -113,36 +113,37 @@ def read_tiny_rows_arrow(
     pyarrow — for the 1-row/handful-row control records (params, index
     stats) whose `spark.read...collect()` was a full Spark job of
     scheduler overhead per probe call (r13). Returns None when the
-    scheme isn't one pyarrow mounts or the read fails — callers fall
-    back to the Spark read. Every call re-reads the bytes; nothing is
-    cached (the no-memo rule): this removes per-job overhead, not
-    work. Only for bounded-size control tables — data tables keep
-    going through Spark."""
+    scheme isn't one pyarrow mounts or pyarrow cannot open the
+    filesystem or a file (ImportError, OSError) — callers fall back to
+    the Spark read. A file that opens but does not decode raises
+    pyarrow's error (a corrupt record is never masked by the fallback).
+    Every call re-reads the bytes; nothing is cached (the no-memo
+    rule): this removes per-job overhead, not work. Only for
+    bounded-size control tables — data tables keep going through
+    Spark."""
     from urllib.parse import urlparse
 
-    try:
-        files = [
-            p
-            for p in pfs.glob_paths(spark, os.path.join(path, "*.parquet"))
-            if urlparse(p).scheme in ("", "file", "hdfs", "s3", "gs")
-        ]
-        if not files:
-            return None
-        import pyarrow.parquet as pq
+    files = [
+        p
+        for p in pfs.glob_paths(spark, os.path.join(path, "*.parquet"))
+        if urlparse(p).scheme in ("", "file", "hdfs", "s3", "gs")
+    ]
+    if not files:
+        return None
+    from parkour_spark.operators.indexcommon import _pa_fs_path
 
-        from parkour_spark.operators.indexcommon import _pa_fs_path
+    rows = []
+    for f in sorted(files):
+        try:
+            import pyarrow.parquet as pq
 
-        rows = []
-        for f in sorted(files):
             fs, p = _pa_fs_path(f)
-            rows.extend(
-                pq.read_table(
-                    fs.open_input_file(p), columns=columns
-                ).to_pylist()
-            )
-        return rows
-    except Exception:
-        return None  # fall back to the Spark read (which may raise)
+            handle = fs.open_input_file(p)
+        except (ImportError, OSError):
+            return None  # fall back to the Spark read (which may raise)
+        with handle:
+            rows.extend(pq.read_table(handle, columns=columns).to_pylist())
+    return rows
 
 
 def check_params(

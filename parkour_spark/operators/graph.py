@@ -2,25 +2,24 @@
 PAIRS (minhash/simhash/embedding operators) into dedup GROUPS with a
 canonical survivor per group (min id).
 
-Spark-first iterative shape:
-- Min-label propagation: every node starts labeled with itself; each
-  round a node takes the min of its own label and its neighbors'
-  labels. Converges in O(component diameter) rounds — near-dup
-  clusters are shallow (diameter a few hops), so a handful of rounds.
-- Each round is one equi-join + one aggregation; lineage is truncated
-  with localCheckpoint every round (an iterative self-join otherwise
-  compounds the plan). At cluster scale pass checkpoint="reliable"
-  (every iterative operator takes the knob; see _truncate) to swap in
-  fault-tolerant df.checkpoint() against the session's checkpoint dir;
-  for billion-edge graphs use the large-star/small-star alternation
-  (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-  same join primitive, fewer rounds.
-- Convergence checks are EXACT in both variants (changed-label count
-  for propagation; count + anti-join set equality for big-star) and
-  ride the per-round checkpoint materialization as OBSERVED metrics
-  (r12) — type-generic, no probabilistic signature, no extra action
-  except big-star's rare equal-count anti-join probe. Exhausting
-  max_iters without a fixpoint warns loudly.
+One algorithm, `connected_components`: large-star/small-star
+alternation (Kiveris et al., "Connected Components in MapReduce and
+Beyond"), O(log n) rounds on any component shape, so a deep chain
+costs a handful of rounds, not its diameter.
+- Membership: the output has one row per DISTINCT node id, and edges
+  with an endpoint outside the node set are dropped before round 1 —
+  every component label is a node id, so every component has exactly
+  one member with n == component (its survivor).
+- Each round is two neighborhood aggregations over the canonical
+  (child, parent) edge set; lineage is truncated with localCheckpoint
+  every round (an iterative self-join otherwise compounds the plan).
+  At cluster scale pass checkpoint="reliable" (every iterative operator
+  takes the knob; see _truncate) to swap in fault-tolerant
+  df.checkpoint() against the session's checkpoint dir.
+- Convergence is EXACT: equal edge count (an observed metric riding
+  the round's checkpoint materialization) plus an early-out anti-join
+  proving new ⊆ old — set equality, type-generic, no probabilistic
+  signature. Exhausting max_iters without a fixpoint warns loudly.
 """
 
 from __future__ import annotations
@@ -64,116 +63,9 @@ def _truncate(df: DataFrame, checkpoint: str, eager: bool = True) -> DataFrame:
     )
 
 
-def _cc_round(labels: DataFrame, sym: DataFrame) -> DataFrame:
-    """ONE min-propagation round, BEFORE the observe/truncate wrapper
-    (r13: exposed so the committed per-round plan evidence —
-    scripts/gen_round_plans.py → plans/r13/ — is the loop's actual
-    shape, not a transcription; checkpoints truncate lineage, so the
-    full entry plans cannot show the round).
-
-    One union + one aggregation (r12, guide §2.4):
-      next(n) = min(own(n) ∪ {comp(m) : m ∈ Γ(n)})
-    expressed as labels ∪ neighbor-contributions → groupBy(n) min.
-    Result-identical to the former least(own, coalesce(nb_min, own))
-    LEFT-join shape — every node contributes its own labels row, so
-    membership and isolated nodes are preserved — but with no second
-    (labels-keyed) join or broadcast build per round. `__own` tags the
-    self row; min(when(__own)) recovers the previous label so the
-    convergence metric needs no old/new comparison join."""
-    contrib = sym.join(labels, sym.b == labels.n).select(
-        F.col("a").alias("n"), F.col("comp"), F.lit(False).alias("__own")
-    )
-    return (
-        labels.select("n", "comp", F.lit(True).alias("__own"))
-        .unionByName(contrib)
-        .groupBy("n")
-        .agg(
-            F.min("comp").alias("comp"),
-            F.min(F.when(F.col("__own"), F.col("comp"))).alias("__prev"),
-        )
-    )
-
-
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "id",
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iters: int = 20,
-    checkpoint: str = "local",
-) -> DataFrame:
-    """(node, component) where component = min node id reachable.
-    Isolated nodes are their own component. `checkpoint="reliable"` is
-    the fault-tolerant cluster mode (see _truncate)."""
-    # Labels propagate in the id's NATIVE orderable type (string doc ids
-    # are as valid as longs for corpus dedup; the old cast-to-long made
-    # every string comp NULL and broke convergence silently — r2 advice).
-    labels = nodes.select(
-        F.col(node_col).alias("n"), F.col(node_col).alias("comp")
-    ).transform(lambda d: _truncate(d, checkpoint))
-    # Membership is enforced ONCE here instead of per round (r12): the
-    # old shape re-imposed it every round through a labels-keyed LEFT
-    # join; restricting sym's source endpoints to the node set up front
-    # lets each round be a single union+aggregate with no second join.
-    # The id source is the CHECKPOINTED labels frame, not `nodes`:
-    # callers like cc_delta_update pass nodes with an expensive
-    # (broadcast-join/union) lineage, and reading the materialized
-    # blocks avoids re-executing it inside sym's first materialization.
-    node_ids = labels.select(F.col("n").alias("__nid"))
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .join(node_ids, F.col("a") == F.col("__nid"), "leftsemi")
-        .persist()
-    )
-    for _ in range(max_iters):
-        # Convergence = no label moved this round, checked type-
-        # generically. The changed-count rides the checkpoint's own
-        # materialization as an observed metric (r12 optimization:
-        # the separate where/limit/count action was one extra job per
-        # round; Observations fire on eager local AND reliable
-        # checkpoints — pinned in tests), so each round runs exactly
-        # one job. count(when(...)) not sum(): count is 0 on an empty
-        # frame where sum is NULL.
-        obs = Observation()
-        nxt = (
-            _cc_round(labels, sym)
-            .observe(
-                obs,
-                F.count(
-                    F.when(F.col("comp") < F.col("__prev"), 1)
-                ).alias("changed"),
-            )
-            .select("n", "comp")
-            .transform(lambda d: _truncate(d, checkpoint))
-        )
-        changed = obs.get["changed"]
-        labels = nxt
-        if changed == 0:
-            break
-    else:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: labels still moving after {max_iters} "
-            "rounds (component diameter exceeds max_iters) — labels are "
-            "partially propagated; raise max_iters or use "
-            "connected_components_bigstar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    sym.unpersist()
-    return labels.select(F.col("n"), F.col("comp").alias("component"))
-
-
 def _bigstar_round(e: DataFrame) -> DataFrame:
     """ONE large-star + small-star pass over the canonical DISTINCT
-    (child, parent) edge set, BEFORE the observe/truncate wrapper (r13:
-    exposed for the loop AND for scripts/gen_round_plans.py's committed
-    per-round plan evidence — the entry plans cannot show the round
-    shape past the checkpoints).
+    (child, parent) edge set, BEFORE the observe/truncate wrapper.
 
     Each star phase is ONE neighborhood aggregation (r13, guide
     §2.3/§2.4): the former groupBy-min + join-back-on-key shape
@@ -219,25 +111,23 @@ def _bigstar_round(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_bigstar(
+def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "id",
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 30,
-    return_rounds: bool = False,
     checkpoint: str = "local",
-) -> DataFrame | tuple[DataFrame, int]:
-    """(node, component) via large-star/small-star alternation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", §3 — the
-    two-phase algorithm). Same contract as `connected_components`, but
-    converges in O(log n) rounds instead of O(component diameter): the
-    100 TB path when near-dup graphs stop being shallow (spam clusters,
-    template farms — chains thousands of hops deep collapse in ~10
-    rounds).
+) -> DataFrame:
+    """(n, component) for every DISTINCT node id, where component = min
+    node id reachable; isolated nodes are their own component.
 
-    Each round is two join+agg passes over the edge set:
+    Large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", §3 — the two-phase
+    algorithm): O(log n) rounds, so chains thousands of hops deep
+    (spam clusters, template farms) collapse in ~10 rounds. Each round
+    is `_bigstar_round`:
     - large-star(u): every neighbor v > u re-points to
       m = min(Γ(u) ∪ {u}) — computed over the SYMMETRIC edge view.
     - small-star(u): every smaller neighbor (and u itself) re-points to
@@ -246,31 +136,50 @@ def connected_components_bigstar(
       symmetrize.
     Both phases emit (child, parent) with parent < child, so the edge
     set stays canonical; at fixpoint it IS the star set
-    (node → component min). Convergence is EXACT (r4, unified with the
-    propagation variant per the r3 verdict): equal edge count plus an
-    early-out anti-join proving new ⊆ old — two tiny driver actions per
-    round, type-generic (string ids fine), no hash-collision
-    false-stop the old (count, xxhash64-sum) signature admitted."""
+    (node → component min).
+
+    Membership: an edge with an endpoint outside `nodes` is dropped
+    before round 1, so every label is a node id (a "ghost" endpoint
+    would otherwise become the min of its component, and no member
+    would be its own survivor). Labels keep the ids' native orderable
+    type (string doc ids are first-class).
+
+    Convergence is EXACT: equal edge count plus an empty
+    (new MINUS old) anti-join — set equality of two canonical DISTINCT
+    edge sets, type-generic, no hash-collision false stop. The count
+    rides each round's checkpoint materialization as an observed
+    metric. Exhausting `max_iters` without a fixpoint warns loudly.
+    `checkpoint="reliable"` is the fault-tolerant cluster mode (see
+    _truncate); the returned labels are materialized through it too,
+    so callers (cc_delta_update's broadcast fan-out) plan over a
+    truncated, sized frame."""
+    # The distinct node set is read twice (the membership semi-joins and
+    # the final labels join); checkpointing it once keeps a caller's
+    # expensive `nodes` lineage (cc_delta_update's unions) from running
+    # twice.
+    ids = (
+        nodes.select(F.col(node_col).alias("n"))
+        .distinct()
+        .transform(lambda d: _truncate(d, checkpoint))
+    )
     obs0 = Observation()
     e = (
         edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .where(F.col(src) != F.col(dst))
+        .where(F.col("x") != F.col("y"))
         .select(
             F.greatest("x", "y").alias("a"), F.least("x", "y").alias("b")
         )
         .distinct()
+        .join(ids.select(F.col("n").alias("a")), "a", "leftsemi")
+        .join(ids.select(F.col("n").alias("b")), "b", "leftsemi")
+        .select("a", "b")
         # edge counts ride the checkpoint materializations as observed
-        # metrics (r12 optimization: the separate count() was one extra
-        # job per round; same piggyback as connected_components)
+        # metrics (r12: a separate count() was one extra job per round)
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .transform(lambda d: _truncate(d, checkpoint))
     )
-
     n_prev = obs0.get["n"]
-    rounds = 0
-    converged = False
     for _ in range(max_iters):
-        rounds += 1
         obs = Observation()
         small = (
             _bigstar_round(e)
@@ -290,24 +199,25 @@ def connected_components_bigstar(
         e = small
         n_prev = n_new
         if unchanged:
-            converged = True
             break
-    if not converged:
+    else:
         import warnings
 
         warnings.warn(
-            f"connected_components_bigstar: no fixpoint after {max_iters} "
-            "rounds — component labels may be partially contracted; raise "
+            f"connected_components: no fixpoint after {max_iters} rounds "
+            "— component labels may be partially contracted; raise "
             "max_iters",
             RuntimeWarning,
             stacklevel=2,
         )
-    labels = (
-        nodes.select(F.col(node_col).alias("n"))
-        .join(e.select(F.col("a").alias("n"), F.col("b").alias("p")), "n", "left")
+    return (
+        ids.join(e.select(F.col("a").alias("n"), F.col("b").alias("p")), "n", "left")
         .select("n", F.coalesce("p", "n").alias("component"))
+        .transform(lambda d: _truncate(d, checkpoint))
     )
-    return (labels, rounds) if return_rounds else labels
+
+
+connected_components_bigstar = connected_components
 
 
 def dedup_survivors(
@@ -335,7 +245,6 @@ def cc_delta_update(
     node_col: str = "id",
     src: str = "id_a",
     dst: str = "id_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """Incremental connected components: fold an ingest batch's nodes
     and edges into an EXISTING (node, component) table without
@@ -344,7 +253,7 @@ def cc_delta_update(
     `minhash_index_append` of the component world, with the same
     result-identity guarantee: `delta(CC(A), B) ≡ CC(A ∪ B)`).
 
-    Requires the min-id labeling this module's CC operators produce
+    Requires the min-id labeling `connected_components` produces
     (component = min reachable node id). That convention is what makes
     contraction sound: each existing component participates as ONE
     super-node — its component id — and since that id is the min of
@@ -424,9 +333,9 @@ def cc_delta_update(
         .union(contracted_edges.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    res = connected_components(
-        contracted_nodes, contracted_edges, "id", max_iters=max_iters
-    ).select(F.col("n").alias("__super"), F.col("component").alias("__new"))
+    res = connected_components(contracted_nodes, contracted_edges, "id").select(
+        F.col("n").alias("__super"), F.col("component").alias("__new")
+    )
     updated = c.join(
         F.broadcast(res), F.col("__c") == F.col("__super")
     ).select(F.col("__n").alias("n"), F.col("__new").alias("component"))
@@ -470,12 +379,12 @@ def pagerank(
     versus dedup_survivors' min-id policy. Isolated nodes hold the base
     rank.
 
-    SCALE: same join primitive as connected_components — one equi-join
-    + one aggregation per round over the (src, dst) list, degrees
-    computed once, lineage truncated per round with localCheckpoint
-    (reliable checkpoint dir on a cluster). Fixed iteration count keeps
-    it one short chain of shuffles; convergence-to-tolerance is a
-    driver loop away but loses the closed-form oracle."""
+    SCALE: one equi-join + one aggregation per round over the (src,
+    dst) list, degrees computed once, lineage truncated per round with
+    localCheckpoint (reliable checkpoint dir on a cluster). Fixed
+    iteration count keeps it one short chain of shuffles;
+    convergence-to-tolerance is a driver loop away but loses the
+    closed-form oracle."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -642,8 +551,7 @@ def kcore(
 
 def _lpa_round(labels: DataFrame, sym: DataFrame) -> DataFrame:
     """ONE synchronous LPA round — (a, __new) per node, BEFORE the
-    truncate wrapper (r13: exposed for the loop and for
-    scripts/gen_round_plans.py's committed per-round plan evidence).
+    truncate wrapper.
 
     (count DESC, label ASC) argmax as min(struct(-cnt, lbl)) —
     result-identical to the former row_number window (struct ordering
@@ -703,7 +611,7 @@ def label_propagation(
         F.col(node_col).alias("n"), F.col(node_col).alias("lbl")
     ).transform(lambda d: _truncate(d, checkpoint))
     # Vote-source endpoints are restricted to the node set ONCE here
-    # (r12, same move as connected_components): every node holds a
+    # (r12): every node holds a
     # self-loop vote row, so the per-round argmax's key set is exactly
     # the node set and the old labels-keyed LEFT join + coalesce that
     # re-imposed membership every round is redundant. The semi-join
@@ -735,8 +643,8 @@ def label_propagation(
         # inside the loop — the final eager checkpoint runs the whole
         # chain in one job while every round's plan still collapses to
         # the previous round's checkpoint-marked blocks.
-        # (connected_components/bigstar read a convergence metric per
-        # round, so they stay eager.) The last round IS eager: sym's
+        # (connected_components reads a convergence metric per round,
+        # so it stays eager.) The last round IS eager: sym's
         # cache blocks must outlive every consumer, so the chain
         # materializes before the unpersist below.
         # Under checkpoint='reliable' EVERY round stays eager (r13,

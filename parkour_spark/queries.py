@@ -2848,10 +2848,10 @@ def _dedup_groups_oracle(
 @query("dedup_groups", _dedup_groups_oracle())
 def q_dedup_groups(spark, sf_dir):
     """Near-dup GROUPS, not just pairs: MinHash-LSH pairs → connected
-    components (operators.graph, min-label propagation, one join+agg
-    per round with checkpointed lineage) → keep the min doc_id per
-    component. The oracle closes the same pair set transitively with a
-    recursive CTE — result is the full corpus mapping with the
+    components (operators.graph.connected_components, large-star/
+    small-star rounds with checkpointed lineage) → keep the min doc_id
+    per component. The oracle closes the same pair set transitively
+    with a recursive CTE — result is the full corpus mapping with the
     keep/drop decision per doc."""
     from parkour_spark.operators.graph import dedup_survivors
 
@@ -2862,13 +2862,13 @@ def q_dedup_groups(spark, sf_dir):
 
 @query("dedup_groups_bigstar", _dedup_groups_oracle())
 def q_dedup_groups_bigstar(spark, sf_dir):
-    """Same near-dup grouping computed by large-star/small-star
-    alternation (operators.graph.connected_components_bigstar, Kiveris
-    et al.) — the O(log n)-round path for DEEP components (spam
-    clusters, template farms) where min-label propagation's
-    O(diameter) rounds blow up. Identical oracle to dedup_groups: both
-    must produce the same transitive closure (a 1200-hop-chain round
-    bound is asserted in tests/test_r3_fixes.py)."""
+    """Same near-dup grouping through the `connected_components_bigstar`
+    name (an alias of operators.graph.connected_components, the one
+    large-star/small-star implementation) with the survivor flag
+    computed inline instead of by dedup_survivors. Identical oracle
+    to dedup_groups: both produce the same transitive closure (a
+    1200-hop chain reaching its fixpoint within 15 rounds is asserted
+    in tests/test_r3_fixes.py)."""
     from parkour_spark.operators.graph import connected_components_bigstar
 
     docs = _t(spark, sf_dir, "documents")

@@ -146,6 +146,25 @@ def test_prefix_filter_agg_prefix_equals_bruteforce(spark):
         assert got == sorted(exp)
 
 
+def union_find_components(nodes, edges) -> dict:
+    """{node: min node id reachable} by union-find — the pure-Python
+    reference for graph.connected_components. Every edge endpoint must
+    be in `nodes`."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_bigstar_fused_rounds_vs_union_find(spark):
     """Fused bigstar rounds (r13 — one collect_set aggregation per star
     phase, no per-phase distinct/join-back) ≡ union-find ground truth
@@ -161,19 +180,7 @@ def test_bigstar_fused_rounds_vs_union_find(spark):
         + [(rng.randint(31, 79), rng.randint(31, 79)) for _ in range(40)]
         + [(5, 5)]
     )
-    parent = list(range(N))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    exp = {(i, find(i)) for i in range(N)}
+    exp = set(union_find_components(range(N), edges).items())
     nodes = spark.createDataFrame([(i,) for i in range(N)], "id long")
     e = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {

@@ -47,6 +47,59 @@ def test_connected_components_long_ids_unchanged(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
 
 
+def _chain(spark, n):
+    nodes = spark.createDataFrame([Row(doc_id=i, score=i % 7) for i in range(n)])
+    edges = spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(n - 1)])
+    return nodes, edges
+
+
+def test_cc_30_hop_chain_at_defaults(spark):
+    # Deeper than the old propagation loop's 20-round cap, which
+    # returned partial labels with only a warning.
+    import warnings
+
+    nodes, edges = _chain(spark, 31)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        cc = connected_components(nodes.select("doc_id"), edges, "doc_id").collect()
+        surv = dedup_survivors(nodes.select("doc_id"), edges).collect()
+    assert len(cc) == 31 and {r["component"] for r in cc} == {0}
+    assert [r["doc_id"] for r in surv if r["is_survivor"]] == [0]
+
+
+def test_keep_best_30_hop_chain_one_survivor(spark):
+    from parkour_spark.operators.graph import dedup_survivors_by
+
+    nodes, edges = _chain(spark, 31)
+    best = dedup_survivors_by(nodes, edges).collect()
+    # score 6 at 6, 13, 20, 27: the min node id breaks the tie
+    assert [r["doc_id"] for r in best if r["is_survivor"]] == [6]
+
+
+def test_cc_ghost_endpoint_is_not_a_label(spark):
+    # An edge endpoint outside `nodes` ('a') may not become a label:
+    # then no member of {b, c} would be its own survivor.
+    from parkour_spark.operators.graph import connected_components_bigstar
+
+    nodes = spark.createDataFrame([Row(id=x) for x in "bcz"])
+    edges = spark.createDataFrame([Row(id_a="c", id_b="b"), Row(id_a="b", id_b="a")])
+    for cc in (connected_components, connected_components_bigstar):
+        got = {r["n"]: r["component"] for r in cc(nodes, edges).collect()}
+        assert got == {"b": "b", "c": "b", "z": "z"}, cc.__name__
+    surv = dedup_survivors(nodes.select(F.col("id").alias("doc_id")), edges).collect()
+    assert sorted(r["doc_id"] for r in surv if r["is_survivor"]) == ["b", "z"]
+
+
+def test_cc_duplicate_node_id_one_row(spark):
+    from parkour_spark.operators.graph import connected_components_bigstar
+
+    nodes = spark.createDataFrame([Row(id=x) for x in "aab"])
+    edges = spark.createDataFrame([Row(id_a="a", id_b="b")])
+    for cc in (connected_components, connected_components_bigstar):
+        got = sorted((r["n"], r["component"]) for r in cc(nodes, edges).collect())
+        assert got == [("a", "a"), ("b", "a")], cc.__name__
+
+
 def test_blob_batch_size_scoped(spark):
     from parkour_spark.operators.multimodal import blob_batch_size
 
@@ -85,39 +138,36 @@ def test_rebatch_for_blobs_no_silent_mutation(spark):
 def test_bigstar_deep_chain_log_rounds(spark):
     # A 1200-hop chain is the adversarial case for naive min-label
     # propagation (O(diameter) rounds — would need 1200); large-star/
-    # small-star must collapse it to one component in O(log n) rounds.
+    # small-star must collapse it to one component in O(log n) rounds:
+    # 15 rounds reach the fixpoint, or the no-fixpoint warning raises.
+    import warnings
+
     from pyspark.sql import Row
     from parkour_spark.operators.graph import connected_components_bigstar
 
     n = 1200
     nodes = spark.createDataFrame([Row(id=i) for i in range(n)])
     edges = spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(n - 1)])
-    labels, rounds = connected_components_bigstar(
-        nodes, edges, return_rounds=True
-    )
-    got = labels.collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = connected_components_bigstar(nodes, edges, max_iters=15).collect()
     assert all(r["component"] == 0 for r in got) and len(got) == n
-    assert rounds <= 15, f"expected O(log n) rounds, took {rounds}"
 
 
 def test_bigstar_matches_naive_on_random_graph(spark):
     import random
 
     from pyspark.sql import Row
-    from parkour_spark.operators.graph import (
-        connected_components,
-        connected_components_bigstar,
-    )
+    from parkour_spark.operators.graph import connected_components_bigstar
+    from test_r13_opt import union_find_components
 
     rng = random.Random(7)
     n = 300
+    pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(200)]
     nodes = spark.createDataFrame([Row(id=i) for i in range(n)])
-    edges = spark.createDataFrame(
-        [Row(id_a=rng.randrange(n), id_b=rng.randrange(n)) for _ in range(200)]
-    )
-    naive = {r["n"]: r["component"] for r in connected_components(nodes, edges).collect()}
+    edges = spark.createDataFrame([Row(id_a=a, id_b=b) for a, b in pairs])
     big = {r["n"]: r["component"] for r in connected_components_bigstar(nodes, edges).collect()}
-    assert naive == big
+    assert big == union_find_components(range(n), pairs)
 
 
 def test_bigstar_string_ids(spark):

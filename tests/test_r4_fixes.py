@@ -40,12 +40,9 @@ def test_auto_banding_scaling_10x_100x_1000x():
 
 
 def test_cc_warns_on_max_iters_exhaustion(spark):
-    """Both CC variants warn loudly when they stop before a fixpoint
+    """Connected components warns loudly when it stops before a fixpoint
     (r3 advice: a silent partial contraction is a wrong answer)."""
-    from parkour_spark.operators.graph import (
-        connected_components,
-        connected_components_bigstar,
-    )
+    from parkour_spark.operators.graph import connected_components
 
     n = 40  # a 40-hop chain cannot converge in 2 rounds
     nodes = spark.range(n).select(F.col("id"))
@@ -54,8 +51,6 @@ def test_cc_warns_on_max_iters_exhaustion(spark):
     )
     with pytest.warns(RuntimeWarning, match="max_iters"):
         connected_components(nodes, edges, max_iters=2).collect()
-    with pytest.warns(RuntimeWarning, match="fixpoint"):
-        connected_components_bigstar(nodes, edges, max_iters=1).collect()
 
 
 def test_stream_join_tight_watermark_bounds_state(spark, tmp_path):
