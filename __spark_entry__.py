@@ -21,7 +21,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate checks the first 50 registry entries;
-# the registry holds 298. ROTATION RULE: the window each round = (a)
+# the registry holds 294. ROTATION RULE: the window each round = (a)
 # entries ADDED this round (plus any earlier late additions still
 # holding zero driver rows), (b) entries whose code or oracle CHANGED
 # this round, (c) filled to 50 with the entries holding the OLDEST
@@ -30,8 +30,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # (scripts/check_oracle.py over ALL entries — same compare: rows +
 # columns + sorted value hash vs DuckDB).
 _GATE_WINDOW = [
-    # late additions
-    "text_stream_then_maxscore_probe", "text_probe_maxscore_after_delete",
+    # text-index entries whose probe or mutation legs changed
+    "text_stream_probe", "text_probe_after_append",
+    "text_probe_after_delete", "text_ingest_compact_probe",
+    "text_build_then_stream_probe", "text_probe_multi_batch",
     # minhash signatures + in-bucket pair explode
     "dedup_minhash_lsh", "dedup_groups",
     "cc_delta_update_groups", "label_propagation_communities",
@@ -52,15 +54,13 @@ _GATE_WINDOW = [
     "dedup_prefix_filter", "dedup_ngram_jaccard_capped",
     "semantic_dedup_kmeans", "semantic_dedup_groups",
     "embedding_neardup_blocked", "dedup_groups_bigstar",
-    "text_probe_persisted", "text_probe_maxscore",
-    "text_probe_multi_maxscore",
+    "text_probe_persisted",
     # oldest-row fills, alphabetical
     "q21_waiting_supplier", "q22_sales_opportunity", "q4_priority_check",
     "quantized_embeddings", "repetition_profile",
     "retention_weekly_cohorts", "semantic_decontamination",
     "sorted_neighborhood_candidates", "source_mixture_weights",
     "substring_dedup_spans", "triangle_counts_dedup_graph",
-    "validate_orders_constraints", "zorder_pruned_scan",
 ]
 
 

@@ -200,6 +200,23 @@ def bm25_topk(
     )
 
 
+def bm25_term_micro(k1: float, b: float):
+    """The per-(doc, term) BM25 contribution in integer micro-units —
+    THE scoring expression, defined once: every BM25 surface (inline,
+    persisted probe, batched probe) must produce bit-identical
+    score_micro values, which only holds while they all evaluate this
+    same column over (tf, dl, df, n_docs, n_total)."""
+    avgdl = F.col("n_total").cast("double") / F.col("n_docs")
+    idf = F.log(
+        1
+        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    tfn = (F.col("tf") * (k1 + 1)) / (
+        F.col("tf") + k1 * ((1 - b) + b * F.col("dl") / avgdl)
+    )
+    return F.round(idf * tfn * 1e6).cast("long")
+
+
 def bm25_score_topk(
     tf: DataFrame,
     totals: DataFrame,
@@ -225,43 +242,6 @@ def bm25_score_topk(
     from the query-term slice via a window — never stored, so the
     identity holds across appends/deletes."""
     tf = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    return _bm25_rank_filtered(
-        tf, totals, qlist, k=k, k1=k1, b=b, id_col=id_col,
-        require_all=require_all, max_df=max_df,
-    )
-
-
-def bm25_term_micro(k1: float, b: float):
-    """The per-(doc, term) BM25 contribution in integer micro-units —
-    THE scoring expression, defined once: every BM25 surface (inline,
-    persisted probe, MaxScore probe) must produce bit-identical
-    score_micro values, which only holds while they all evaluate this
-    same column over (tf, dl, df, n_docs, n_total)."""
-    avgdl = F.col("n_total").cast("double") / F.col("n_docs")
-    idf = F.log(
-        1
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tfn = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * ((1 - b) + b * F.col("dl") / avgdl)
-    )
-    return F.round(idf * tfn * 1e6).cast("long")
-
-
-def _bm25_rank_filtered(
-    tf: DataFrame,
-    totals: DataFrame,
-    qlist: list[str],
-    k: int,
-    k1: float,
-    b: float,
-    id_col: str,
-    require_all: bool,
-    max_df: int | None,
-) -> DataFrame:
-    """bm25_score_topk's tail for a tf slice that already carries df —
-    the MaxScore probe enters here with its termstats-supplied exact
-    df instead of the window derivation."""
     req = None
     if require_all:
         # classic AND: every requested-and-uncapped term must match —

@@ -12875,108 +12875,6 @@ def q_text_probe_multi_batch(spark, sf_dir):
     )
 
 
-_MULTI_MS_QUERY_SETS = [
-    (0, ("dup", "hash", "scan")),
-    (1, ("dup", "join")),
-    (2, ("hash", "scan")),
-]
-
-
-@query(
-    "text_probe_multi_maxscore",
-    _bm25_multi_oracle(_MULTI_MS_QUERY_SETS),
-)
-def q_text_probe_multi_maxscore(spark, sf_dir):
-    """Batched BM25 serving WITH per-query MaxScore early termination
-    (textindex.text_index_probe_bm25_multi_maxscore, r12 — r11 verdict
-    #3): the two serving wins composed. The batch amortizes ONE
-    partition-pruned postings scan over all three queries; each query
-    then skips scoring its high-df non-essential terms outside its
-    essential-candidate set, with the θ-search for ALL queries run in
-    lockstep (one job per geometric prefix round — O(log max_terms)
-    jobs for the whole batch, the single-query probe's bound paid
-    once). Queries 0 and 1 mix the rare 'dup' with stopword-adjacent
-    terms (the runtime asserts their per-query skips really happened);
-    query 2 is uniform-ub and scores everything — per-query exactness
-    never depends on the skip landing. The oracle is the same
-    FULL-scoring batched replay that gates the plain multi probe:
-    exact top-k per query, provably cheaper for the skewed ones."""
-    import tempfile
-
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_probe_bm25_multi_maxscore,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    key = (sf_dir, "text")
-    if key not in _R10_INDEX_DIRS:
-        tmp = tempfile.mkdtemp(prefix="parkour_textidx_")
-        text_index_build(docs, tmp, n_buckets=16)
-        _R10_INDEX_DIRS[key] = tmp
-    stats: dict = {}
-    out = text_index_probe_bm25_multi_maxscore(
-        spark,
-        _R10_INDEX_DIRS[key],
-        _MULTI_MS_QUERY_SETS,
-        k=10,
-        stats_out=stats,
-    )
-    assert stats["fallback"] is None, stats
-    pq = stats["per_query"]
-    assert pq[0]["essential"] == ["dup"], stats
-    assert pq[0]["rows_skipped_lower_bound"] > 0, stats
-    assert pq[1]["essential"] == ["dup"], stats
-    assert pq[1]["rows_skipped_lower_bound"] > 0, stats
-    return out
-
-
-@query(
-    "text_probe_maxscore",
-    _bm25_idx_oracle(terms=("dup", "hash", "scan")),
-)
-def q_text_probe_maxscore(spark, sf_dir):
-    """MaxScore early termination served from the persisted index
-    (textindex.text_index_probe_bm25_maxscore, r10 verdict #4): the
-    query mixes ONE rare term ('dup' — ~5% of docs) with two
-    stopword-adjacent terms (~80% each), the shape where scoring every
-    posting is mostly waste. The probe takes 'dup' as the essential
-    set from the persisted termstats upper bounds, proves the k-th
-    best dup-only partial score exceeds the non-essential bound, and
-    scores the high-df terms ONLY for dup's candidate docs — the
-    runtime asserts the skip really happened (thousands of postings
-    rows never scored at sf0.1) AND that no fallback fired, then the
-    gate pins the result against the FULL-scoring oracle: exact top-k,
-    provably cheaper."""
-    import tempfile
-
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_probe_bm25_maxscore,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    key = (sf_dir, "text")
-    if key not in _R10_INDEX_DIRS:
-        tmp = tempfile.mkdtemp(prefix="parkour_textidx_")
-        text_index_build(docs, tmp, n_buckets=16)
-        _R10_INDEX_DIRS[key] = tmp
-    stats: dict = {}
-    out = text_index_probe_bm25_maxscore(
-        spark,
-        _R10_INDEX_DIRS[key],
-        ("dup", "hash", "scan"),
-        k=10,
-        stats_out=stats,
-    )
-    # the early-termination claim is part of the entry: no fallback,
-    # 'dup' alone essential, and a real row skip — not just equal rows
-    assert stats["fallback"] is None, stats
-    assert stats["essential"] == ["dup"], stats
-    assert stats["rows_skipped_lower_bound"] > 0, stats
-    return out
-
-
 @query("text_probe_after_append", _bm25_idx_oracle())
 def q_text_probe_after_append(spark, sf_dir):
     """Append identity for the text index: build on the content-hash
@@ -13005,52 +12903,6 @@ def q_text_probe_after_append(spark, sf_dir):
     return text_index_probe_bm25(
         spark, _R10_INDEX_DIRS[key], _BM25_TERMS, k=10
     )
-
-
-@query(
-    "text_probe_maxscore_after_append",
-    _bm25_idx_oracle(terms=("dup", "hash", "scan")),
-)
-def q_text_probe_maxscore_after_append(spark, sf_dir):
-    """MaxScore early termination SURVIVING an append (r12, r11
-    verdict #4): the termstats table is maintained incrementally
-    through text_index_append (the batch's per-term df/max_tf/min_dl
-    merge monotonically into the stored table, staged before and
-    renamed in after the postings land — a crash leaves it absent,
-    never stale), so the appended index serves early-terminated probes
-    WITHOUT waiting for a compact. The entry asserts no fallback fired
-    and the row skip is real on the build+append index, then the gate
-    pins the result against the FULL-corpus full-scoring oracle —
-    under r11 this same probe fell back to plain scoring."""
-    import tempfile
-
-    from parkour_spark.functions.sampling import hash_bucket
-    from parkour_spark.operators.textindex import (
-        text_index_append,
-        text_index_build,
-        text_index_probe_bm25_maxscore,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    bkt = hash_bucket(F.col("doc_id"), 100)
-    key = (sf_dir, "text_append")
-    if key not in _R10_INDEX_DIRS:
-        tmp = tempfile.mkdtemp(prefix="parkour_textidx_app_")
-        text_index_build(docs.where(bkt < 80), tmp, n_buckets=16)
-        text_index_append(docs.where(bkt >= 80), tmp, n_buckets=16)
-        _R10_INDEX_DIRS[key] = tmp
-    stats: dict = {}
-    out = text_index_probe_bm25_maxscore(
-        spark,
-        _R10_INDEX_DIRS[key],
-        ("dup", "hash", "scan"),
-        k=10,
-        stats_out=stats,
-    )
-    assert stats["fallback"] is None, stats  # survived the append
-    assert stats["essential"] == ["dup"], stats
-    assert stats["rows_skipped_lower_bound"] > 0, stats
-    return out
 
 
 @query(
@@ -13088,57 +12940,6 @@ def q_text_probe_after_delete(spark, sf_dir):
     )
 
 
-@query(
-    "text_probe_maxscore_after_delete",
-    _bm25_idx_oracle(where="doc_id % 10 <> 7", terms=("dup", "hash", "scan")),
-)
-def q_text_probe_maxscore_after_delete(spark, sf_dir):
-    """MaxScore early termination SURVIVING a delete (r12 extra wave —
-    the last lifecycle leg where it died): `text_index_delete(...,
-    maintain_termstats=True)` stages a survivor-exact df decrement
-    from one column-pruned postings scan (max_tf/min_dl stay as
-    still-valid bounds) and renames it in after the ledger lands, and
-    the probe now serves a PENDING tombstone ledger by anti-joining
-    every slice — θ passes included — instead of falling back. The
-    entry asserts no fallback fired and the row skip is real on the
-    deleted index; the gate pins the rows against the SURVIVOR-corpus
-    full-scoring oracle (df, N, avgdl all shifted as a survivor
-    build). Under r11 this probe fell back to plain scoring until the
-    next compact."""
-    import tempfile
-
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_delete,
-        text_index_probe_bm25_maxscore,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    key = (sf_dir, "text_delete_ms")
-    if key not in _R10_INDEX_DIRS:
-        tmp = tempfile.mkdtemp(prefix="parkour_textidx_delms_")
-        text_index_build(docs, tmp, n_buckets=16)
-        text_index_delete(
-            spark,
-            docs.where(F.col("doc_id") % 10 == 7).select("doc_id"),
-            tmp,
-            maintain_termstats=True,
-        )
-        _R10_INDEX_DIRS[key] = tmp
-    stats: dict = {}
-    out = text_index_probe_bm25_maxscore(
-        spark,
-        _R10_INDEX_DIRS[key],
-        ("dup", "hash", "scan"),
-        k=10,
-        stats_out=stats,
-    )
-    assert stats["fallback"] is None, stats  # survived the delete
-    assert stats["essential"] == ["dup"], stats
-    assert stats["rows_skipped_lower_bound"] > 0, stats
-    return out
-
-
 @query("text_ingest_compact_probe", _bm25_idx_oracle())
 def q_text_ingest_compact_probe(spark, sf_dir):
     """END-TO-END pipeline for the text index: 4-batch exactly-once
@@ -13173,51 +12974,36 @@ def q_text_ingest_compact_probe(spark, sf_dir):
 
 
 @query(
-    "text_stream_then_maxscore_probe",
+    "text_stream_probe",
     _bm25_idx_oracle(terms=("dup", "hash", "scan")),
 )
-def q_text_stream_then_maxscore_probe(spark, sf_dir):
-    """MaxScore served from a STREAMING-ONLY index with NO compact
-    (r12): streaming_text_ingest maintains the termstats table through
-    every micro-batch via the staged stage→invalidate→publish→rename
-    protocol — the first batch CREATES it from its own stats, later
-    batches merge monotonically — so early termination works the
-    moment the stream drains. The 4-batch replay covers the full
-    corpus; the entry asserts no fallback fired and the row skip is
-    real, and the gate pins the result against the FULL-scoring
-    oracle. Under r11 every streaming batch invalidated the table and
-    this probe fell back until a compact ran."""
+def q_text_stream_probe(spark, sf_dir):
+    """BM25 probe on a STREAMING-ONLY index with NO compact: a 4-batch
+    exactly-once replay of the full corpus into a fresh root (each
+    batch publishes its doclen+postings pair and re-derives stats),
+    then the plain probe over the per-batch file sets. Oracle = the
+    full-corpus BM25 replay: ingest(Σ batches) ≡ build(all) before any
+    compaction folds the batches."""
     import tempfile
 
-    from parkour_spark.operators.textindex import (
-        text_index_probe_bm25_maxscore,
-    )
+    from parkour_spark.operators.textindex import text_index_probe_bm25
     from parkour_spark.streaming.windows import streaming_text_ingest
 
     docs = _t(spark, sf_dir, "documents")
-    key = (sf_dir, "text_stream_ms")
+    key = (sf_dir, "text_stream")
     if key not in _R10_INDEX_DIRS:
-        src = tempfile.mkdtemp(prefix="parkour_text_sms_src_")
+        src = tempfile.mkdtemp(prefix="parkour_text_stream_src_")
         docs.select("doc_id", "text").repartition(4).write.mode(
             "overwrite"
         ).parquet(src)
-        idx = tempfile.mkdtemp(prefix="parkour_text_sms_idx_")
+        idx = tempfile.mkdtemp(prefix="parkour_text_stream_idx_")
         streaming_text_ingest(
             spark, src, spark.read.parquet(src).schema, idx, n_buckets=16
         )
         _R10_INDEX_DIRS[key] = idx
-    stats: dict = {}
-    out = text_index_probe_bm25_maxscore(
-        spark,
-        _R10_INDEX_DIRS[key],
-        ("dup", "hash", "scan"),
-        k=10,
-        stats_out=stats,
+    return text_index_probe_bm25(
+        spark, _R10_INDEX_DIRS[key], ("dup", "hash", "scan"), k=10
     )
-    assert stats["fallback"] is None, stats  # alive without a compact
-    assert stats["essential"] == ["dup"], stats
-    assert stats["rows_skipped_lower_bound"] > 0, stats
-    return out
 
 
 # ===========================================================================

@@ -1190,19 +1190,7 @@ def streaming_text_ingest(
     rewrite); a replay that finds doclen committed but postings not is
     the torn middle state — both dirs are rebuilt, so the pair commits
     or neither does. After draining: probe ≡ probe(build(all)),
-    gate-pinned; `text_index_compact` is the terminal fold.
-
-    TERMSTATS STAY ALIVE through the stream (r12, extending the r11
-    verdict #4 append protocol): each batch stages the merged MaxScore
-    table BEFORE invalidating the live one and publishes it with one
-    rename AFTER the pair commits — a fresh root's first batch creates
-    the table from its own stats, so early termination serves from a
-    streaming index WITHOUT waiting for a compact. Any crash ordering
-    leaves the table absent (probe falls back, exact, and it STAYS
-    absent for the rest of the run — the catch-up replay invalidates
-    because a replayed batch cannot know whether the staged merge
-    covered it); compact restores. Delete still invalidates (df can
-    shrink — the honest asymmetry)."""
+    gate-pinned; `text_index_compact` is the terminal fold."""
     import os
 
     from parkour_spark import fs as pfs
@@ -1211,23 +1199,12 @@ def streaming_text_ingest(
     from parkour_spark.operators.textindex import (
         _check_text_meta,
         _doclen,
-        _invalidate_termstats,
         _postings,
-        _stage_merged_termstats,
-        _sweep_termstats_staging,
         _write_stats,
     )
 
     caught_up = [False]
-
-    def rederive() -> None:
-        _write_stats(spark, index_path)
-        # catch-up on REPLAY: a replayed batch cannot know whether the
-        # staged termstats merge covered it (the crash may have landed
-        # between the postings publish and the rename), so the only
-        # exact move is invalidation — stale df must never serve (r11
-        # review); the happy path below maintains the table instead
-        _invalidate_termstats(spark, index_path)
+    rederive = lambda: _write_stats(spark, index_path)  # noqa: E731
 
     def ingest(batch_df, batch_id: int) -> None:
         pdir = os.path.join(index_path, "postings", f"batch={batch_id}")
@@ -1248,47 +1225,26 @@ def streaming_text_ingest(
             )
         else:
             _check_text_meta(spark, index_path, n_buckets)
-        _sweep_termstats_staging(spark, index_path)
-        batch_post = _postings(batch_df, text_col, id_col, n_buckets).persist()
-        try:
-            # the append protocol's stage → invalidate → publish →
-            # rename ordering (textindex.text_index_append): stage the
-            # merged termstats while the live table still matches the
-            # live postings, invalidate BEFORE any batch row becomes
-            # visible (r11 ADVICE — the old publish-then-invalidate
-            # order could serve a committed batch against a stale df),
-            # publish the pair, rewrite stats, rename the merge in
-            staging = _stage_merged_termstats(
-                spark, index_path, batch_post
-            )
-            _invalidate_termstats(spark, index_path)
-            if pfs.exists(spark, ldir):
-                pfs.delete(spark, ldir)  # torn pair: doclen, no postings
-            publish_dir(
-                spark,
-                ldir,
-                lambda tmp: _doclen(batch_df, text_col, id_col)
-                .write.mode("overwrite")
-                .parquet(tmp),
-            )
-            publish_dir(
-                spark,
-                pdir,
-                lambda tmp: batch_post
-                .repartition("tbucket")
-                .sortWithinPartitions("term", id_col)
-                .write.mode("overwrite")
-                .partitionBy("tbucket")
-                .parquet(tmp),
-            )
-            _write_stats(spark, index_path)
-            if staging is not None:
-                if not pfs.rename(
-                    spark, staging, index_path + "/termstats"
-                ):
-                    pfs.delete(spark, staging)  # absent → fallback
-        finally:
-            batch_post.unpersist()
+        if pfs.exists(spark, ldir):
+            pfs.delete(spark, ldir)  # torn pair: doclen, no postings
+        publish_dir(
+            spark,
+            ldir,
+            lambda tmp: _doclen(batch_df, text_col, id_col)
+            .write.mode("overwrite")
+            .parquet(tmp),
+        )
+        publish_dir(
+            spark,
+            pdir,
+            lambda tmp: _postings(batch_df, text_col, id_col, n_buckets)
+            .repartition("tbucket")
+            .sortWithinPartitions("term", id_col)
+            .write.mode("overwrite")
+            .partitionBy("tbucket")
+            .parquet(tmp),
+        )
+        _write_stats(spark, index_path)
         caught_up[0] = True  # derived state now covers all stored rows
 
     return _drain_ingest(

@@ -22,10 +22,12 @@ import json
 import math
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from parkour_spark.queries import ORACLES, QUERIES  # noqa: E402
 from parkour_spark.session import build_session  # noqa: E402
@@ -72,7 +74,7 @@ def write_gate_env():
         env["pandas"] = pandas.__version__
     except Exception:
         pass
-    with open("/root/repo/GATE_ENV.json", "w") as f:
+    with open(ROOT / "GATE_ENV.json", "w") as f:
         json.dump(env, f, indent=2)
         f.write("\n")
 

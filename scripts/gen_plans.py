@@ -6,8 +6,10 @@ from __future__ import annotations
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from parkour_spark.queries import QUERIES  # noqa: E402
 from parkour_spark.session import build_session  # noqa: E402
@@ -111,12 +113,9 @@ COMMENTARY = {
     "ivf_recall_at_k": "Both retrieval arms share the corpus scan shape (broadcast queries, per-query ranking window); the recall join is top-k-output-sized (50 rows vs 50 rows), so the evaluation costs two corpus scans and nothing more.",
     "multimodal_jpeg_dedup_agree": "The economics identity plan: one blob scan feeds BOTH arms (persisted), the per-row arm decodes inside mapInPandas, the dedup-first arm dedups fingerprints with a map-side partial agg BEFORE its decode — the join back is md5-key-sized, blobs never shuffle.",
     "substring_probe_after_delete": "Probe-only plan against the persisted lists/ artifact: the batch fingerprint scan equi-joins the committed df-capped lists, span segmentation is one (id_new, id_old, delta)-keyed window — the corpus occ/ table is not in the plan at all (deletes already folded in at publish time).",
-    "text_probe_maxscore": "MaxScore final plan (r11, broadcast-cand r12): tbucket PartitionFilters + pushed term IN-list like the plain probe, corpus text scanned nowhere, and the non-essential postings slice reduced by a LEFT SEMI join against the essential candidates — BROADCAST when the driver's Σ-essential-df termstats bound proves the set small, so the rest slice never exchanges; the dropped rows are the ones early termination provably never scores.",
     "text_probe_conjunctive_capped": "require_all + max_df on the persisted probe: same pruned postings scan; the capped-term count rides as a broadcast 1-row aggregate (no driver-side count), the conjunction is a post-aggregation filter — options add zero extra scans.",
     "substring_probe_delete_readrepair": "The tombstone read-repair probe (r11): the usual lists/ equi-join plan plus ONE broadcast anti-join of the pending ledger ids applied post-explode — delete cost moved to O(|B|), probe cost unchanged in shape.",
     "text_probe_multi_batch": "The batched probe (r11): ONE tbucket-pruned postings scan covers the union of all queries' terms; per-term df via window, each query selects its rows through a BROADCAST (query_id, term) map, one query-partitioned rank window — a whole query batch for one scan's worth of plan.",
-    "text_probe_multi_maxscore": "Batched MaxScore final pass (r12, single-scan rewrite): ONE tbucket-pruned scan over all terms fans out through a broadcast (query_id, term, is_ess) map; non-essential rows survive a broadcast-candidate LEFT join + filter (equivalent to the old semi-join, without a second scan or an exchange of the rest slice), and the shared tail ranks per query — the θ-search's prefix jobs ran lockstep on their OWN term-pruned slices before this plan, and driver-side can't-clear/can't-pay screens dropped provably useless prefixes without any job.",
-    "text_probe_maxscore_after_append": "MaxScore served from a build+APPEND index (r12): identical plan shape to text_probe_maxscore — the point is what is ABSENT: no fallback to full scoring, because the append maintained termstats incrementally (staged merge + rename) instead of invalidating it until compact.",
 }
 
 # Plans that aren't a registered query's OUTPUT but ARE the evidence a
@@ -179,7 +178,7 @@ def main() -> None:
         if scans:
             out.write(f"--- scan details ---\n{scans[:1500]}\n")
         out.write("```\n\n")
-    open("/root/repo/PLANS.md", "w").write(out.getvalue())
+    (ROOT / "PLANS.md").write_text(out.getvalue())
     print("wrote PLANS.md")
 
 

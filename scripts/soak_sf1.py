@@ -27,8 +27,9 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
@@ -816,35 +817,11 @@ def _soak_text_delete_small(spark):
     return spark.read.parquet(f"{DST}/text_index/doclen").select("doc_id")
 
 
-def _soak_text_probe_maxscore_only(spark):
-    """MaxScore early termination at 10× scale (r11): one rare term
-    ('dup' — the only rare token in the synthetic vocabulary) + two
-    ~80%-df terms. The timed claim vs `text_probe_plain_dup_query`:
-    identical top-k (gate- and unit-pinned elsewhere) with the two
-    stopword-adjacent postings lists scored only for the rare term's
-    candidates — no fallback asserted, rows-skipped printed into the
-    soak log. Run AFTER the compact row (termstats fresh)."""
-    from parkour_spark.operators.textindex import (
-        text_index_probe_bm25_maxscore,
-    )
-
-    stats: dict = {}
-    got = text_index_probe_bm25_maxscore(
-        spark, f"{DST}/text_index", ("dup", "hash", "scan"), k=10,
-        stats_out=stats,
-    )
-    got.collect()
-    assert stats["fallback"] is None, stats
-    print(
-        f"    [maxscore] essential={stats['essential']} "
-        f"rows_skipped>={stats['rows_skipped_lower_bound']}"
-    )
-    return got
-
-
 def _soak_text_probe_plain_dup_query(spark):
-    """The SAME rare+stopword query through the plain full-scoring
-    probe — the yardstick for the MaxScore row above."""
+    """One rare term ('dup' — the only rare token in the synthetic
+    vocabulary) + two ~80%-df terms through the persisted probe on the
+    compacted 10× index: the stopword-adjacent postings lists dominate
+    its cost."""
     from parkour_spark.operators.textindex import text_index_probe_bm25
 
     return text_index_probe_bm25(
@@ -862,9 +839,8 @@ _MULTI_SOAK_QUERIES = [
 
 def _soak_text_probe_multi_plain(spark):
     """A 4-query batch through the plain batched probe (r11): ONE
-    partition-pruned postings scan amortized over the batch — the
-    yardstick for the maxscore-composed row below. Compare also with
-    4× text_probe_plain_dup_query: the batch should cost far less
+    partition-pruned postings scan amortized over the batch. Compare
+    with 4× text_probe_plain_dup_query: the batch should cost far less
     than 4 independent probes."""
     from parkour_spark.operators.textindex import (
         text_index_probe_bm25_multi,
@@ -873,74 +849,6 @@ def _soak_text_probe_multi_plain(spark):
     return text_index_probe_bm25_multi(
         spark, f"{DST}/text_index", _MULTI_SOAK_QUERIES, k=10
     )
-
-
-def _soak_text_probe_multi_maxscore(spark):
-    """The SAME 4-query batch with per-query MaxScore composed on
-    (r12, r11 verdict #3): the lockstep θ-search adds O(log max_terms)
-    small jobs for the WHOLE batch, and the three dup-anchored queries
-    then skip their stopword postings outside dup's candidates — the
-    scan amortization and the skip compound instead of competing with
-    per-query job latency. No fallback asserted; per-query skips
-    printed into the soak log. Runs right after compact (termstats
-    fresh)."""
-    from parkour_spark.operators.textindex import (
-        text_index_probe_bm25_multi_maxscore,
-    )
-
-    stats: dict = {}
-    got = text_index_probe_bm25_multi_maxscore(
-        spark, f"{DST}/text_index", _MULTI_SOAK_QUERIES, k=10,
-        stats_out=stats,
-    )
-    got.collect()
-    assert stats["fallback"] is None, stats
-    for q, s in sorted(stats["per_query"].items()):
-        print(
-            f"    [multi-maxscore] q{q}: essential={s['essential']} "
-            f"rows_skipped>={s.get('rows_skipped_lower_bound')}"
-        )
-    return got
-
-
-def _soak_text_append_termstats_alive(spark):
-    """Append a 100-doc batch to the compacted 10× index, then serve
-    a MaxScore probe from it (r12, r11 verdict #4): the timed claim is
-    the append costs only its own batch work PLUS the staged termstats
-    merge (old termstats scan + batch stats + rename — NOT a postings
-    rewrite), and early termination SURVIVES the append (no fallback
-    asserted — under r11 this probe fell back to full scoring until
-    the next compact). Runs LAST in the text family: it mutates the
-    index."""
-    from parkour_spark.operators.textindex import (
-        text_index_append,
-        text_index_probe_bm25_maxscore,
-    )
-
-    docs = spark.read.parquet(f"{DST}/documents.parquet")
-    top = docs.agg(F.max("doc_id")).first()[0]
-    batch = (
-        docs.orderBy("doc_id").limit(100)
-        .select(
-            (F.col("doc_id") + top + 1).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" appended replica")).alias(
-                "text"
-            ),
-        )
-    )
-    text_index_append(batch, f"{DST}/text_index", n_buckets=16)
-    stats: dict = {}
-    got = text_index_probe_bm25_maxscore(
-        spark, f"{DST}/text_index", ("dup", "hash", "scan"), k=10,
-        stats_out=stats,
-    )
-    got.collect()
-    assert stats["fallback"] is None, stats  # survived the append
-    print(
-        f"    [append+maxscore] essential={stats['essential']} "
-        f"rows_skipped>={stats['rows_skipped_lower_bound']}"
-    )
-    return got
 
 
 def _soak_text_compact_only(spark):
@@ -1096,19 +1004,12 @@ SOAK_CUSTOM = {
     "text_inline_same_query": _soak_text_inline_same_query,
     "text_index_delete_only": _soak_text_delete_only,
     # r11: the |B|-scaling companion, then compact (reconciles the
-    # ledger + rebuilds termstats), then the MaxScore serving pair
-    # (which REQUIRES fresh termstats, hence the ordering)
+    # ledger), then the rare+stopword probe and the batched probe on
+    # the compacted index
     "text_index_delete_small": _soak_text_delete_small,
     "text_index_compact_only": _soak_text_compact_only,
-    "text_probe_maxscore_only": _soak_text_probe_maxscore_only,
     "text_probe_plain_dup_query": _soak_text_probe_plain_dup_query,
-    # r12: the batched serving pair (scan amortization × per-query
-    # skip — r11 verdict #3) runs while termstats is still fresh; the
-    # append row runs LAST in the family (it mutates the index) and
-    # asserts early termination SURVIVED the append (r11 verdict #4)
     "text_probe_multi_plain": _soak_text_probe_multi_plain,
-    "text_probe_multi_maxscore": _soak_text_probe_multi_maxscore,
-    "text_append_termstats_alive": _soak_text_append_termstats_alive,
     "bpe_train_seq16": _soak_bpe_seq16,
     "bpe_train_batched16": _soak_bpe_batched16,
     # r11: production-dimension IVF compaction economics + the

@@ -410,19 +410,3 @@ def test_text_probe_prunes_buckets_and_pushes_terms(spark, queries):
     assert m, plan
     for cols in m:
         assert "text" not in cols.split(","), plan
-
-
-def test_text_maxscore_probe_plan_prunes_and_semijoins(spark, queries):
-    """The MaxScore probe's FINAL plan (r11): still bucket-pruned and
-    term-pushed like the plain probe, corpus text scanned nowhere, and
-    the non-essential slice reduced via a (broadcast) semi-join against
-    the essential candidates — never a full-list score."""
-    plan = _plan(queries["text_probe_maxscore"](spark, SF_DIR))
-    assert re.search(r"PartitionFilters: \[[^\]]*tbucket", plan), plan
-    assert re.search(r"PushedFilters: \[[^\]]*In\(term", plan), plan
-    assert "LeftSemi" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    m = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert m, plan
-    for cols in m:
-        assert "text" not in cols.split(","), plan

@@ -1,11 +1,11 @@
 """Property-based tests for the r11 surfaces (hypothesis): the
-tombstone-ledger delete identities and MaxScore exactness, driven
+tombstone-ledger delete identities, driven
 through randomized corpora — Spark↔Spark equalities, bit-for-bit (the
 discipline that found the r9 LZW width bug and the r10 zero-postings
 crash). The pre-existing r10 delete property already exercises the
 READ-REPAIR window (text_index_delete is now a tombstone append);
-these add the physical-reconciliation identity, MaxScore ≡ plain, and
-the MinHash read-repair probe."""
+these add the physical-reconciliation identity and the MinHash
+read-repair probe."""
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -78,36 +78,6 @@ def test_prop_text_delete_compact_physically_equals_survivor_build(
     ) == _bm25_rows(text_index_probe_bm25(spark, surv, terms, k=20))
     for sub in ("postings", "doclen"):
         assert ids_remaining(spark, f"{idx}/{sub}", "doc_id", dead_ids) == []
-
-
-@given(
-    doc_words=docs_strategy,
-    qidx=st.sets(
-        st.integers(min_value=0, max_value=len(_WORDS)), min_size=1, max_size=4
-    ),
-    k=st.integers(min_value=1, max_value=20),
-)
-@settings(**_SETTINGS)
-def test_prop_maxscore_equals_plain_probe(
-    spark, tmp_path_factory, doc_words, qidx, k
-):
-    """MaxScore ≡ plain probe for random corpora, query sets (index
-    len(_WORDS) maps to a term absent from every doc), and k — whether
-    early termination triggers, every term ends essential, or a
-    fallback fires, the top-k must be identical."""
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_probe_bm25,
-        text_index_probe_bm25_maxscore,
-    )
-
-    docs = _docs_df(spark, doc_words)
-    terms = [(_WORDS + ["zzz"])[i] for i in sorted(qidx)]
-    idx = str(tmp_path_factory.mktemp("t11") / "idx")
-    text_index_build(docs, idx, n_buckets=4)
-    assert _bm25_rows(
-        text_index_probe_bm25_maxscore(spark, idx, terms, k=k)
-    ) == _bm25_rows(text_index_probe_bm25(spark, idx, terms, k=k))
 
 
 @given(

@@ -241,49 +241,6 @@ def _stream_src(spark, tmp_path, rows, name="src"):
     return src, spark.read.parquet(src).schema
 
 
-def test_streaming_text_ingest_maintains_exact_termstats(spark, tmp_path):
-    """r12 (superseding the r11 invalidate-on-every-batch pin): each
-    streaming batch maintains the MaxScore termstats table through the
-    staged stage→invalidate→publish→rename protocol — a fresh root's
-    first batch CREATES it, later batches merge, and after draining
-    the table is byte-identical to a fresh build's (never stale: any
-    crash ordering leaves it absent, and a CRASHED run's continuation
-    stays absent — pinned below)."""
-    from parkour_spark import fs as pfs
-    from parkour_spark.operators.textindex import (
-        _invalidate_termstats,
-        text_index_build,
-    )
-    from parkour_spark.streaming.windows import streaming_text_ingest
-
-    idx = str(tmp_path / "idx")
-    rows1 = [(1000, "alpha shared streamed doc")]
-    rows2 = [(1001, "beta shared streamed doc two")]
-    src, schema = _stream_src(spark, tmp_path, rows1)
-    streaming_text_ingest(spark, src, schema, idx, n_buckets=4)
-    assert pfs.exists(spark, idx + "/termstats")  # alive from batch 0
-    _docs(spark, rows2).coalesce(1).write.mode("append").parquet(src)
-    streaming_text_ingest(spark, src, schema, idx, n_buckets=4)
-    assert pfs.exists(spark, idx + "/termstats")
-    ref = str(tmp_path / "ref")
-    text_index_build(_docs(spark, rows1 + rows2), ref, n_buckets=4)
-    key = lambda df: sorted(  # noqa: E731
-        (r.term, r.tbucket, r.df, r.max_tf, r.min_dl) for r in df.collect()
-    )
-    assert key(spark.read.parquet(idx + "/termstats")) == key(
-        spark.read.parquet(ref + "/termstats")
-    )
-    # crash continuation: a populated index whose termstats died must
-    # STAY absent through further batches (a merge base is gone — only
-    # compact may rebuild from the reconciled survivors)
-    _invalidate_termstats(spark, idx)
-    _docs(spark, [(1002, "gamma shared third")]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    streaming_text_ingest(spark, src, schema, idx, n_buckets=4)
-    assert not pfs.exists(spark, idx + "/termstats")
-
-
 def test_streaming_ingest_refuses_pending_tombstoned_id(spark, tmp_path):
     """Streaming a retired id onto a pending ledger must raise (the
     probe-side anti-join would hide the new rows, and the next compact

@@ -1,12 +1,10 @@
 """Hypothesis properties for the r12 exact identities (the r10 house
 rule: every new exact identity gets a randomized pin — Spark↔Spark
 equalities are bit-exact, so tiny corpora with max_examples=6
-suffice): arrow-fold ≡ row-fold, build∘stream ≡ build(union),
-append-merged termstats ≡ fresh-build termstats, and the SequenceFile
-codec round-trip over randomized rows."""
+suffice): arrow-fold ≡ row-fold, build∘stream ≡ build(union), and
+the SequenceFile codec round-trip over randomized rows."""
 
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
 
 _SETTINGS = dict(
     max_examples=6,
@@ -88,19 +86,14 @@ def test_arrow_fold_equals_row_fold_property(
     terms=st.lists(_words, min_size=1, max_size=3, unique=True),
 )
 @settings(**_SETTINGS)
-def test_text_build_stream_union_and_termstats_property(
+def test_text_build_stream_union_property(
     spark, tmp_path_factory, base_docs, stream_docs, terms
 ):
-    """Two identities in one staging: probe(build(A) then stream(B)) ≡
-    probe(build(A∪B)) — the r12 layout-normalization contract — AND
-    the stream-maintained termstats table is byte-identical to the
-    fresh union build's (the staged-rename merge is exact), so a
-    MaxScore probe on the streamed root equals the plain probe."""
-    from parkour_spark.artifacts import read_parquet_or_none
+    """probe(build(A) then stream(B)) ≡ probe(build(A∪B)) — the r12
+    layout-normalization contract — over randomized corpora."""
     from parkour_spark.operators.textindex import (
         text_index_build,
         text_index_probe_bm25,
-        text_index_probe_bm25_maxscore,
     )
     from parkour_spark.streaming.windows import streaming_text_ingest
 
@@ -129,18 +122,6 @@ def test_text_build_stream_union_and_termstats_property(
     assert rows(text_index_probe_bm25(spark, idx, terms, k=5)) == rows(
         text_index_probe_bm25(spark, ref, terms, k=5)
     )
-    key = lambda df: sorted(  # noqa: E731
-        (r.term, r.tbucket, r.df, r.max_tf, r.min_dl)
-        for r in df.collect()
-    )
-    ts_idx = read_parquet_or_none(spark, idx + "/termstats")
-    ts_ref = read_parquet_or_none(spark, ref + "/termstats")
-    assert (ts_idx is None) == (ts_ref is None)  # both empty-corpus
-    if ts_idx is not None:
-        assert key(ts_idx) == key(ts_ref)
-    assert rows(
-        text_index_probe_bm25_maxscore(spark, idx, terms, k=5)
-    ) == rows(text_index_probe_bm25(spark, idx, terms, k=5))
 
 
 _writable_cases = st.sampled_from(
@@ -182,60 +163,3 @@ def test_seqfile_python_roundtrip_property(tmp_path_factory, case, data):
     )
     assert n == len(rows)
     assert list(read_seqfile_py(p)) == rows
-
-
-@given(
-    docs=st.lists(
-        st.lists(_words, min_size=0, max_size=6),
-        min_size=1,
-        max_size=12,
-    ),
-    delmask=st.lists(st.booleans(), min_size=12, max_size=12),
-    k=st.integers(min_value=1, max_value=4),
-)
-@settings(**_SETTINGS)
-def test_maintained_delete_maxscore_equals_survivor_build_property(
-    spark, tmp_path_factory, docs, delmask, k
-):
-    """maxscore-probe(delete(B, maintain_termstats=True)) ≡
-    plain-probe(build(A∖B)) bit-exact over randomized corpora, delete
-    subsets, and k — the r12 delete-leg extension of the lifecycle
-    identity family (probes must agree through every fallback branch:
-    all-essential, empty survivor set, vanished terms)."""
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_delete,
-        text_index_probe_bm25,
-        text_index_probe_bm25_maxscore,
-    )
-
-    base = tmp_path_factory.mktemp("mdel")
-    rows = [(i, " ".join(ws)) for i, ws in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    dels = [i for i in range(len(rows)) if delmask[i % len(delmask)]]
-    idx = str(base / "idx")
-    text_index_build(df, idx, n_buckets=2)
-    text_index_delete(
-        spark,
-        spark.createDataFrame([(i,) for i in dels] or [(-1,)], "doc_id long"),
-        idx,
-        maintain_termstats=True,
-    )
-    surv = str(base / "surv")
-    text_index_build(
-        df.where(~F.col("doc_id").isin(dels) if dels else F.lit(True)),
-        surv,
-        n_buckets=2,
-    )
-    terms = ["alpha", "beta", "rare1"]
-    got = sorted(
-        tuple(r)
-        for r in text_index_probe_bm25_maxscore(
-            spark, idx, terms, k=k
-        ).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in text_index_probe_bm25(spark, surv, terms, k=k).collect()
-    )
-    assert got == want

@@ -1,9 +1,10 @@
-"""Round-10: persisted full-text retrieval index
-(operators/textindex.py — the fifth index family). Gate entries pin
-the lifecycle against the ANSI BM25 replay at sf0.01; these tests pin
-the mechanics: probe ≡ inline bm25_topk, append/delete identity with
-df/idf shifts, zero-length docs in the stats, compact identity,
-streaming pair-commit semantics, and the layout guard."""
+"""Persisted full-text retrieval index (operators/textindex.py — the
+fifth index family). Gate entries pin the lifecycle against the ANSI
+BM25 replay at sf0.01; these tests pin the mechanics: probe ≡ inline
+bm25_topk, append/delete identity with df/idf shifts, zero-length docs
+in the stats, compact identity, streaming pair-commit semantics, the
+batched probe's query semantics, the on-disk layout, and the layout
+guard."""
 
 import os
 
@@ -330,4 +331,103 @@ def test_conjunctive_and_df_cap_options(spark, corpus, tmp_path):
     ) == _rows(
         bm25_topk(ctl, ("the", "spark", "shuffle"), k=10,
                   require_all=True, max_df=3)
+    )
+
+
+def test_absent_terms_and_k_larger_than_matches(spark, tmp_path):
+    """A query term absent from the corpus contributes nothing, and a k
+    above the number of matching docs returns every match — probe ≡
+    inline bm25_topk in both cases."""
+    rows = [(i, f"common filler {i}" + (" rareterm" if i % 3 == 0 else ""))
+            for i in range(8)]
+    docs = _docs(spark, rows)
+    idx = str(tmp_path / "idx")
+    text_index_build(docs, idx, n_buckets=4)
+    terms = ["zzznope", "rareterm"]
+    got = _rows(text_index_probe_bm25(spark, idx, terms, k=50))
+    assert got == _rows(bm25_topk(docs, terms, k=50))
+    assert sorted(r[0] for r in got) == [0, 3, 6]
+    assert all(r[1] == 1 for r in got)
+    assert text_index_probe_bm25(spark, idx, ["zzznope"], k=5).collect() == []
+
+
+def test_multi_probe_duplicate_query_ids_union_terms(spark, corpus, tmp_path):
+    """Two entries with the same query id are ONE query over the union
+    of their terms ((query_id, term)-pair semantics): row-identical to
+    a single probe of the merged term set."""
+    from parkour_spark.operators.textindex import text_index_probe_bm25_multi
+
+    idx = str(tmp_path / "idx")
+    text_index_build(corpus, idx, n_buckets=4)
+    dup_qs = [(0, ("spark",)), (0, ("shuffle", "scan"))]
+    got = text_index_probe_bm25_multi(spark, idx, dup_qs, k=40).collect()
+    assert {r.query_id for r in got} == {0}
+    assert sorted((r.doc_id, r.n_qterms, r.score_micro) for r in got) == _rows(
+        text_index_probe_bm25(spark, idx, TERMS, k=40)
+    )
+    assert max(r.n_qterms for r in got) == 3
+
+
+def test_multi_probe_on_pending_deletes_equals_survivor_build(
+    spark, corpus, tmp_path
+):
+    """The batched probe serves a pending tombstone ledger like the
+    single probe: every query's rows equal the same batch over a
+    build of the survivors (df, N and avgdl shifted)."""
+    from parkour_spark.operators.textindex import text_index_probe_bm25_multi
+
+    idx = str(tmp_path / "idx")
+    text_index_build(corpus, idx, n_buckets=4)
+    text_index_delete(
+        spark, corpus.where(F.col("doc_id") % 3 == 0).select("doc_id"), idx
+    )
+    surv = str(tmp_path / "surv")
+    text_index_build(corpus.where(F.col("doc_id") % 3 != 0), surv, n_buckets=4)
+    batch = [(0, list(TERMS)), (1, ["join"]), (2, ["zznope"])]
+
+    def rows(path):
+        return sorted(
+            tuple(r)
+            for r in text_index_probe_bm25_multi(spark, path, batch, k=5).collect()
+        )
+
+    assert rows(idx) == rows(surv) and rows(idx)
+
+
+def test_lifecycle_writes_no_termstats(spark, corpus, tmp_path):
+    """build → append → delete → compact → streaming ingest persists
+    only postings/doclen/stats/meta/tombstones: no per-term statistics
+    table (or a staging sibling of one) appears under the root, and the
+    probe still equals a build of the final membership."""
+    from parkour_spark.streaming.windows import streaming_text_ingest
+
+    idx = str(tmp_path / "idx")
+    base = corpus.where(F.col("doc_id") < 20)
+    text_index_build(base, idx, n_buckets=4)
+    text_index_append(corpus.where(F.col("doc_id") >= 20), idx)
+    text_index_delete(
+        spark, corpus.where(F.col("doc_id") % 4 == 1).select("doc_id"), idx
+    )
+    text_index_compact(spark, idx)
+    extra = _docs(spark, [(200, "spark scan streamed"), (201, "join agg")])
+    src = str(tmp_path / "src")
+    extra.coalesce(1).write.parquet(src)
+    streaming_text_ingest(
+        spark, src, spark.read.parquet(src).schema, idx, n_buckets=4
+    )
+    found = [
+        os.path.join(d, n)
+        for d, dirs, files in os.walk(idx)
+        for n in dirs + files
+        if n.startswith("termstats")
+    ]
+    assert found == []
+    final = str(tmp_path / "final")
+    text_index_build(
+        corpus.where(F.col("doc_id") % 4 != 1).unionByName(extra),
+        final,
+        n_buckets=4,
+    )
+    assert _rows(text_index_probe_bm25(spark, idx, TERMS, k=10)) == _rows(
+        text_index_probe_bm25(spark, final, TERMS, k=10)
     )
