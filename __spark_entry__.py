@@ -55,12 +55,15 @@ _GATE_WINDOW = [
     "semantic_dedup_kmeans", "semantic_dedup_groups",
     "embedding_neardup_blocked", "dedup_groups_bigstar",
     "text_probe_persisted",
+    # vector-index streaming legs (shared ingest loop) and deletes
+    # (shared cell rewrite)
+    "streaming_ivf_ingest_probe", "ivf_ingest_compact_probe",
+    "streaming_pq_ingest_probe", "pq_ingest_compact_probe",
+    "ivfpq_ingest_compact_probe", "ivf_probe_after_delete",
+    "ivfpq_probe_after_delete",
     # oldest-row fills, alphabetical
     "q21_waiting_supplier", "q22_sales_opportunity", "q4_priority_check",
-    "quantized_embeddings", "repetition_profile",
-    "retention_weekly_cohorts", "semantic_decontamination",
-    "sorted_neighborhood_candidates", "source_mixture_weights",
-    "substring_dedup_spans", "triangle_counts_dedup_graph",
+    "quantized_embeddings",
 ]
 
 

@@ -1570,11 +1570,13 @@ def substring_index_build(
     occ = _positioned_occurrences(corpus_df, text_col, id_col, k, w)
     occ.write.mode("overwrite").parquet(path + "/occ")
     write_params(
-        spark,
-        path + "/meta",
-        {"k": k, "w": w, "max_df": max_df, "id_col": id_col},
+        spark, path + "/meta", _substring_meta_record(k, w, max_df, id_col)
     )
     _write_substring_lists(spark, path, id_col, max_df)
+
+
+def _substring_meta_record(k: int, w: int, max_df: int, id_col: str) -> dict:
+    return {"k": k, "w": w, "max_df": max_df, "id_col": id_col}
 
 
 def _check_substring_meta(
@@ -1648,7 +1650,6 @@ def substring_index_delete(
     k: int = 8,
     w: int = 8,
     max_df: int = 50,
-    auto_compact_threshold: int | None = None,
 ) -> None:
     """DELETE documents from a persisted substring index — the retire
     leg (right-to-be-forgotten, dedup-after-removal). `delete(B) from
@@ -1677,22 +1678,12 @@ def substring_index_delete(
 
     COMPLIANCE: the delete is LOGICAL until a compact reconciles it —
     the retired bytes persist in occ/ until then (the indexcommon
-    module note). Pass `auto_compact_threshold=N` to run
-    `substring_index_compact` inline once the pending ledger exceeds
-    N ids; right-to-be-forgotten flows should either do that or follow
-    up with an explicit compact + ids_remaining audit."""
-    from parkour_spark.operators.indexcommon import (
-        append_tombstones,
-        pending_tombstone_count,
-    )
+    module note). Right-to-be-forgotten flows follow it with
+    `substring_index_compact` and an `artifacts.ids_remaining` audit."""
+    from parkour_spark.operators.indexcommon import append_tombstones
 
     _check_substring_meta(spark, path, k, w, max_df, id_col)
     append_tombstones(spark, path, ids, id_col)
-    if (
-        auto_compact_threshold is not None
-        and pending_tombstone_count(spark, path) > auto_compact_threshold
-    ):
-        substring_index_compact(spark, path, id_col=id_col)
 
 
 def substring_probe_persisted(
@@ -2001,41 +1992,48 @@ def minhash_index_build(
     shuffle); every ingest batch then pays only its OWN signatures plus
     one broadcast equi-join probe (`minhash_probe_delta`) — cost
     independent of corpus size in everything but the index scan."""
+    from parkour_spark.artifacts import write_params
     from parkour_spark.operators.indexcommon import clear_tombstones
 
     spark = corpus_df.sparkSession
     clear_tombstones(spark, path)  # a rebuild starts a fresh index:
     # a leftover ledger would hide the new corpus's rows (r11)
-    sig = minhash_signature(corpus_df, text_col, id_col, num_hashes, ngram_n)
-    sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"sig_{i}") for i in range(num_hashes)]).alias("sigs"),
+    _signature_rows(
+        corpus_df, text_col, id_col, num_hashes, ngram_n
     ).write.mode("overwrite").parquet(path + "/sigs")
-    _write_index_meta(spark, path, num_hashes, bands, ngram_n, max_bucket)
-    _write_band_index(spark, path, id_col, num_hashes, bands, max_bucket)
-
-
-def _write_index_meta(
-    spark, path: str, num_hashes: int, bands: int, ngram_n: int,
-    max_bucket: int,
-) -> None:
-    """Persist the index's build parameters under `path`/meta via the
-    shared artifact contract (parkour_spark.artifacts, r8 verdict #3) —
-    the hash family (num_hashes, ngram_n) and band layout (bands,
-    max_bucket) are properties of the STORED bytes, so append, delete,
-    and probe must use the same values or read garbage."""
-    from parkour_spark.artifacts import write_params
-
     write_params(
         spark,
         path + "/meta",
-        {
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "ngram_n": ngram_n,
-            "max_bucket": max_bucket,
-        },
+        _minhash_meta_record(num_hashes, bands, ngram_n, max_bucket),
     )
+    _write_band_index(spark, path, id_col, num_hashes, bands, max_bucket)
+
+
+def _signature_rows(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, ngram_n: int
+) -> DataFrame:
+    """(id, sigs array<long>): the stored sigs/ row of each document."""
+    sig = minhash_signature(df, text_col, id_col, num_hashes, ngram_n)
+    return sig.select(
+        F.col(id_col),
+        F.array(*[F.col(f"sig_{i}") for i in range(num_hashes)]).alias("sigs"),
+    )
+
+
+def _minhash_meta_record(
+    num_hashes: int, bands: int, ngram_n: int, max_bucket: int
+) -> dict:
+    """The index's meta/ record (parkour_spark.artifacts parameter
+    guard) — the hash family (num_hashes, ngram_n) and band layout
+    (bands, max_bucket) are properties of the STORED bytes, so append,
+    delete, streaming ingest and probe must use the same values or read
+    garbage."""
+    return {
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "ngram_n": ngram_n,
+        "max_bucket": max_bucket,
+    }
 
 
 def _check_index_meta(
@@ -2145,10 +2143,8 @@ def minhash_index_append(
     spark = new_df.sparkSession
     _check_index_meta(spark, path, num_hashes, bands, ngram_n, max_bucket)
     check_ids_not_tombstoned(spark, path, new_df.select(id_col), id_col)
-    sig = minhash_signature(new_df, text_col, id_col, num_hashes, ngram_n)
-    sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"sig_{i}") for i in range(num_hashes)]).alias("sigs"),
+    _signature_rows(
+        new_df, text_col, id_col, num_hashes, ngram_n
     ).write.mode("append").parquet(path + "/sigs")
     _write_band_index(spark, path, id_col, num_hashes, bands, max_bucket)
 
@@ -2162,7 +2158,6 @@ def minhash_index_delete(
     bands: int = 4,
     ngram_n: int = 3,
     max_bucket: int = 200,
-    auto_compact_threshold: int | None = None,
 ) -> None:
     """DELETE documents from a persisted MinHash index — the retire leg
     that completes the build/append/delete/probe lifecycle (r8 verdict
@@ -2195,22 +2190,13 @@ def minhash_index_delete(
 
     COMPLIANCE: the delete is LOGICAL until a compact reconciles it —
     the retired signature bytes persist in sigs/ until then (the
-    indexcommon module note). Pass `auto_compact_threshold=N` to run
-    `minhash_index_compact` inline once the pending ledger exceeds N
-    ids; right-to-be-forgotten flows should either do that or follow
-    up with an explicit compact + ids_remaining audit."""
-    from parkour_spark.operators.indexcommon import (
-        append_tombstones,
-        pending_tombstone_count,
-    )
+    indexcommon module note). Right-to-be-forgotten flows follow it
+    with `minhash_index_compact` and an `artifacts.ids_remaining`
+    audit."""
+    from parkour_spark.operators.indexcommon import append_tombstones
 
     _check_index_meta(spark, path, num_hashes, bands, ngram_n, max_bucket)
     append_tombstones(spark, path, ids, id_col)
-    if (
-        auto_compact_threshold is not None
-        and pending_tombstone_count(spark, path) > auto_compact_threshold
-    ):
-        minhash_index_compact(spark, path, id_col=id_col)
 
 
 def minhash_probe_delta(

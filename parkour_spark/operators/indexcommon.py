@@ -13,7 +13,7 @@ that layer. The dseq/dsink write-then-read-back contract
 must never see a torn or retired row) is the reference anchor for
 every piece here.
 
-Two pieces:
+Three pieces:
 
 1. **TableSpec + rewrite_table/compact_table** — a stored table's
    canonical layout (row columns, partition column, within-file sort,
@@ -59,11 +59,14 @@ Two pieces:
    occurrences) persist on disk until a compact physically reconciles
    them. A flow that deletes and never compacts retains the data
    indefinitely. Compliance deletes MUST be followed by the family's
-   compact + an `artifacts.ids_remaining` audit; alternatively pass
-   `auto_compact_threshold` to the delete legs, which runs the compact
-   inline once the pending ledger exceeds that many ids
-   (`pending_tombstone_count` exposes the ledger size for external
+   compact + an `artifacts.ids_remaining` audit
+   (`pending_tombstone_count` exposes the ledger size for compact
    schedulers).
+
+3. **delete_from_cells** — the physical delete shared by the
+   cell-partitioned vector indexes (IVF, IVF-PQ), whose deletes
+   address the affected `cell=<c>` partitions from the retired
+   vectors instead of keeping a ledger.
 """
 
 from __future__ import annotations
@@ -181,8 +184,8 @@ def pending_tombstone_count(spark, base: str) -> int:
     ledger versions) — size frequent polls accordingly. The operational
     signal for compact scheduling: deletes are LOGICAL until a compact
     reconciles them (see the module compliance note), so a maintenance
-    loop — or the delete legs' own `auto_compact_threshold` — watches
-    this."""
+    loop watches this and follows a compliance delete with the family's
+    compact and an `artifacts.ids_remaining` audit."""
     t = read_tombstones(spark, base)
     return 0 if t is None else t.count()
 
@@ -261,6 +264,48 @@ def reconcile_tombstones(
         if rederive is not None:
             rederive()
         clear_tombstones(spark, base)
+
+
+def delete_from_cells(
+    spark,
+    path: str,
+    stored: DataFrame,
+    cells: list,
+    del_df: DataFrame,
+    id_col: str,
+) -> None:
+    """Physically delete `del_df`'s ids from the `cells` partitions of
+    a `cell=<c>`-partitioned index at `path` (IVF, IVF-PQ; the family
+    computes `cells` from the retired vectors). Only those cells are
+    read (partition-pruned), anti-joined against the broadcast id set
+    and rewritten via dynamic partition overwrite; untouched cells are
+    never read or rewritten.
+
+    The surviving cells are collected BEFORE the write: dynamic
+    overwrite only replaces partitions present in the written data, so
+    an emptied cell's old directory survives the write and is deleted
+    explicitly afterwards (reading back would mistake its stale rows
+    for survivors). Each rewritten cell is replaced atomically by the
+    committer; a crash between the write and the empty-cell removal
+    heals by re-running the same delete (idempotent)."""
+    ids = F.broadcast(del_df.select(id_col).distinct())
+    survivors = stored.where(F.col("cell").isin(cells)).join(
+        ids, id_col, "left_anti"
+    )
+    kept = {
+        int(r["cell"]) for r in survivors.select("cell").distinct().collect()
+    }
+    if kept:
+        (
+            survivors.repartition("cell")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell")
+            .parquet(path)
+        )
+    for c in cells:
+        if c not in kept:
+            pfs.delete(spark, f"{path}/cell={c}")
 
 
 def ids_probe_visible(

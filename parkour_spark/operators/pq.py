@@ -563,22 +563,22 @@ def pq_index_build(
     similarity.ivf_index_build's centroids."""
     from parkour_spark.artifacts import write_params
 
-    spark = corpus.sparkSession
-    m = len(codebooks)
     pq_encode(corpus, codebooks, vec_col, id_col).write.mode(
         "overwrite"
     ).parquet(path + "/codes")
     write_params(
-        spark,
-        path + "/meta",
-        {
-            "m": m,
-            "ksub": len(codebooks[0]),
-            "dsub": len(codebooks[0][0][1]),
-            "id_col": id_col,
-            "codebooks": _codebooks_record(codebooks),
-        },
+        corpus.sparkSession, path + "/meta", _pq_meta_record(codebooks, id_col)
     )
+
+
+def _pq_meta_record(codebooks: Codebooks, id_col: str) -> dict:
+    return {
+        "m": len(codebooks),
+        "ksub": len(codebooks[0]),
+        "dsub": len(codebooks[0][0][1]),
+        "id_col": id_col,
+        "codebooks": _codebooks_record(codebooks),
+    }
 
 
 def read_pq_codebooks(spark, path: str) -> Codebooks:
@@ -955,9 +955,8 @@ def ivfpq_index_delete(
     suspected crashes)."""
     import numpy as np
 
-    from parkour_spark import fs as pfs
-
     from parkour_spark.artifacts import read_parquet_or_none
+    from parkour_spark.operators.indexcommon import delete_from_cells
 
     spark = del_df.sparkSession
     coarse, _cbs, id_col = read_ivfpq_meta(spark, path)
@@ -968,8 +967,6 @@ def ivfpq_index_delete(
     # the residual codebooks are irrelevant for addressing: one
     # batch-sized Arrow pass assigns coarse cells with the same
     # pairwise-L2 argmin the build used
-    from pyspark.sql import functions as _F
-
     def cells_of(batches):
         import pandas as pd
 
@@ -988,24 +985,7 @@ def ivfpq_index_delete(
     )
     if not cells:
         return
-    ids = _F.broadcast(del_df.select(id_col).distinct())
-    affected = stored.where(_F.col("cell").isin(cells))
-    survivors = affected.join(ids, id_col, "left_anti")
-    kept = {
-        int(r["cell"])
-        for r in survivors.select("cell").distinct().collect()
-    }
-    if kept:
-        (
-            survivors.repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    for c in cells:
-        if c not in kept:
-            pfs.delete(spark, f"{path}/cell={c}")
+    delete_from_cells(spark, path, stored, cells, del_df, id_col)
 
 
 def ivfpq_index_compact(spark, path: str) -> None:

@@ -291,6 +291,8 @@ def ivf_index_build(
     PARTITION PRUNING possible. Built once per corpus version; query
     batches then pay only probed-cell reads (ivf_probe_topk), the
     embedding analog of `substring_fp_index` for text."""
+    from parkour_spark.artifacts import write_params
+
     assigned = ivf_assign_arrow(widen_scan(corpus), centroids, corpus_vec, "cell")
     (
         assigned.withColumn("cnorm", norm(corpus_vec))
@@ -305,29 +307,23 @@ def ivf_index_build(
         .partitionBy("cell")
         .parquet(path)
     )
-    _write_ivf_meta(corpus.sparkSession, path, centroids)
-
-
-def _write_ivf_meta(spark, path: str, centroids) -> None:
-    """Persist the quantizer under `path`/_ivf_meta (the underscore
-    prefix keeps it out of the partitioned dataset's discovery, like
-    _SUCCESS) via the shared artifact contract (parkour_spark.artifacts,
-    r8 verdict #3; JSON round-trips every double exactly): the
-    inverted-list layout is a pure function of these centroids, so
-    append/delete/probe with a DIFFERENT quantizer reads/writes the
-    wrong lists — the minhash meta/ discipline for the embedding
-    index."""
-    from parkour_spark.artifacts import write_params
-
     write_params(
-        spark,
-        path + "/_ivf_meta",
-        {
-            "centroids": [
-                [int(cid), [float(x) for x in v]] for cid, v in centroids
-            ]
-        },
+        corpus.sparkSession, path + "/_ivf_meta", _ivf_meta_record(centroids)
     )
+
+
+def _ivf_meta_record(centroids) -> dict:
+    """The quantizer record stored under `path`/_ivf_meta (the
+    underscore prefix keeps it out of the partitioned dataset's
+    discovery, like _SUCCESS) via the shared artifact contract
+    (parkour_spark.artifacts; JSON round-trips every double exactly):
+    the inverted-list layout is a pure function of these centroids, so
+    append/delete/probe/streaming ingest with a DIFFERENT quantizer
+    reads/writes the wrong lists — the minhash meta/ discipline for the
+    embedding index."""
+    return {
+        "centroids": [[int(cid), [float(x) for x in v]] for cid, v in centroids]
+    }
 
 
 def _check_ivf_meta(spark, path: str, centroids) -> None:
@@ -430,7 +426,8 @@ def ivf_index_delete(
     ids absent from the index are a no-op. The quantizer is validated
     against the persisted build record (_ivf_meta) — a different
     quantizer would prune the wrong cells and silently miss rows."""
-    from parkour_spark import fs as pfs
+    from parkour_spark.artifacts import read_parquet_or_none
+    from parkour_spark.operators.indexcommon import delete_from_cells
 
     spark = del_df.sparkSession
     _check_ivf_meta(spark, path, centroids)
@@ -442,34 +439,10 @@ def ivf_index_delete(
     )
     if not cells:
         return
-    from parkour_spark.artifacts import read_parquet_or_none
-
-    ids = F.broadcast(del_df.select(corpus_id).distinct())
     stored = read_parquet_or_none(spark, path)
     if stored is None:
         return  # already-empty index: nothing to delete
-    affected = stored.where(F.col("cell").isin(cells))
-    survivors = affected.join(ids, corpus_id, "left_anti")
-    # survivor cells BEFORE the write: dynamic overwrite only replaces
-    # partitions present in the written data, so an emptied cell's OLD
-    # dir survives the write — reading back afterwards would see the
-    # stale rows and mistake them for survivors. (Both jobs are
-    # partition-pruned to the affected cells.)
-    kept = {
-        int(r["cell"])
-        for r in survivors.select("cell").distinct().collect()
-    }
-    if kept:
-        (
-            survivors.repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    for c in cells:
-        if c not in kept:
-            pfs.delete(spark, f"{path}/cell={c}")
+    delete_from_cells(spark, path, stored, cells, del_df, corpus_id)
 
 
 def ivf_index_compact(

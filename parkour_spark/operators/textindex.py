@@ -182,6 +182,10 @@ def _stats_df(spark, path: str) -> DataFrame:
     )
 
 
+def _text_meta_record(n_buckets: int, id_col: str) -> dict:
+    return {"n_buckets": n_buckets, "id_col": id_col}
+
+
 def _check_text_meta(spark, path: str, n_buckets: int | None) -> None:
     from parkour_spark.artifacts import check_params
 
@@ -240,9 +244,7 @@ def text_index_build(
     _doclen(docs, text_col, id_col).write.mode("overwrite").parquet(
         path + "/doclen"
     )
-    write_params(
-        spark, path + "/meta", {"n_buckets": n_buckets, "id_col": id_col}
-    )
+    write_params(spark, path + "/meta", _text_meta_record(n_buckets, id_col))
     _write_stats(spark, path)
 
 
@@ -282,12 +284,7 @@ def text_index_append(
     _write_stats(spark, path)
 
 
-def text_index_delete(
-    spark,
-    ids: DataFrame,
-    path: str,
-    auto_compact_threshold: int | None = None,
-) -> None:
+def text_index_delete(spark, ids: DataFrame, path: str) -> None:
     """DELETE documents in O(|delete set|): the retired ids land on
     the index's tombstone ledger (one atomic |B|-row write — postings/
     and doclen/ are NOT rewritten; r10 verdict #2, replacing the
@@ -312,23 +309,13 @@ def text_index_delete(
 
     COMPLIANCE: the delete is LOGICAL until a compact reconciles it —
     the retired postings/doclen bytes persist until then (the
-    indexcommon module note). Pass `auto_compact_threshold=N` to run
-    `text_index_compact` inline once the pending ledger exceeds N ids;
-    right-to-be-forgotten flows should either do that or follow up
-    with an explicit compact + ids_remaining audit."""
-    from parkour_spark.operators.indexcommon import (
-        append_tombstones,
-        pending_tombstone_count,
-    )
+    indexcommon module note). Right-to-be-forgotten flows follow it
+    with `text_index_compact` and an `artifacts.ids_remaining` audit."""
+    from parkour_spark.operators.indexcommon import append_tombstones
 
     id_col = _read_meta(spark, path)["id_col"]
     append_tombstones(spark, path, ids, id_col)
     _write_stats(spark, path)
-    if (
-        auto_compact_threshold is not None
-        and pending_tombstone_count(spark, path) > auto_compact_threshold
-    ):
-        text_index_compact(spark, path)
 
 
 def text_index_compact(spark, path: str) -> None:

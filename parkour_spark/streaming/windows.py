@@ -788,33 +788,103 @@ def streaming_component_maintainer(
     return spark.read.parquet(final)
 
 
-def _drain_ingest(
-    spark, source_path, schema, index_path, ingest, max_files,
-    normalize=(),
-):
-    """The one-shot exactly-once ingest harness every persisted-index
-    streaming leg shares (r11, the indexcommon unification):
-    foreachBatch(ingest) with the checkpoint under the index root,
-    drained with processAllAvailable, stopped, index root returned.
+def _ingest_index(
+    spark, source_path: str, schema, index_path: str, max_files: int,
+    tables: list, meta: tuple, rederive: Callable[[], None] | None = None,
+    id_col: str | None = None,
+) -> str:
+    """Drain a file-backed stream into a persisted index, exactly once —
+    the one commit protocol every `streaming_*_ingest` leg runs (an
+    index is this engine's dsink: a reader never sees a torn batch or a
+    batch written against the wrong layout).
 
-    `normalize` names the tables this family streams batches into
-    (r12, r11 verdict #6): each is layout-normalized
-    (indexcommon.ensure_batch_layout — pure renames moving a BUILT or
-    COMPACTED layout under batch=-1/) before the stream starts, so
-    streaming onto an existing built/compacted root now composes
-    instead of tripping Spark's mixed-partition-depth rejection."""
-    import os
+    A family passes only what is its own:
+      `tables`   — ordered (subdir, rows, partition_by) triples;
+                   micro-batch <id> of table `subdir` ("" = the index
+                   root) is `rows(batch_df)`, written (partitioned by
+                   `partition_by` when set) into a temp sibling and
+                   renamed to `<subdir>/batch=<id>/`
+                   (artifacts.publish_dir), so a torn write never
+                   occupies the batch name;
+      `meta`     — (name, record, check): the parameter record stored
+                   at `<index>/<name>` and the family's guard against it;
+      `rederive` — the wholesale rewrite of derived state (band table,
+                   probe lists, stats) from all stored rows, if any;
+      `id_col`   — set for the doc-keyed families, whose batches must
+                   not reuse a pending tombstoned id
+                   (indexcommon.check_ids_not_tombstoned).
 
-    from parkour_spark.operators.indexcommon import ensure_batch_layout
+    Protocol, per micro-batch:
+      1. Meta guard: the record is written when absent, else checked
+         (mismatch raises). It runs before the commit gate, so nothing
+         is published — and no replay's catch-up rederive runs —
+         against a different layout.
+      2. Commit gate: the LAST table's `batch=<id>/_SUCCESS` is the
+         batch's commit point. A replay (crash after the publish,
+         before the checkpoint's offset commit) finds it and skips —
+         a plain append would double-write the batch. The first
+         replay of a run re-runs `rederive` once (the catch-up latch:
+         a crash can land between the publish and the rederive, and
+         one wholesale rewrite covers every replayed batch).
+      3. Torn batch: otherwise every `batch=<id>` directory left in
+         any of the tables is removed — a multi-table batch (text:
+         doclen then postings) commits whole or not at all.
+      4. Pending tombstones are checked (doc-keyed families), the
+         tables are published in order, and `rederive` runs.
 
-    for t in normalize:
-        ensure_batch_layout(spark, t)
-    stream = read_stream(spark, source_path, schema, max_files=max_files)
+    Before the stream starts each table is layout-normalized
+    (indexcommon.ensure_batch_layout: pure renames moving a built or
+    compacted layout under `batch=-1/`), so streaming onto an existing
+    root composes. The checkpoint lives under `<index>/_checkpoint`;
+    the query is drained (processAllAvailable) and stopped, and
+    `index_path` returned. After draining, probe(ingest(Σ batches)) ≡
+    probe(build(all rows)) per family (gate-pinned); the family's
+    compact folds the batch tree into the build layout."""
+    from parkour_spark import fs as pfs
+    from parkour_spark.artifacts import publish_dir, write_params
+    from parkour_spark.operators.indexcommon import (
+        check_ids_not_tombstoned,
+        ensure_batch_layout,
+    )
+
+    meta_name, record, check_meta = meta
+    meta_path = f"{index_path}/{meta_name}"
+    roots = [f"{index_path}/{t[0]}" if t[0] else index_path for t in tables]
+    caught_up = False
+
+    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal caught_up
+        if pfs.exists(spark, meta_path):
+            check_meta()
+        else:
+            write_params(spark, meta_path, record)
+        dirs = [f"{root}/batch={batch_id}" for root in roots]
+        if pfs.exists(spark, dirs[-1] + "/_SUCCESS"):
+            if rederive is not None and not caught_up:
+                rederive()
+                caught_up = True
+            return
+        for d in dirs:
+            if pfs.exists(spark, d):
+                pfs.delete(spark, d)
+        if id_col is not None:
+            check_ids_not_tombstoned(
+                spark, index_path, batch_df.select(id_col), id_col
+            )
+        for d, (_, rows, part) in zip(dirs, tables):
+            out = rows(batch_df).write.mode("overwrite")
+            out = out.partitionBy(part) if part else out
+            publish_dir(spark, d, lambda tmp, o=out: o.parquet(tmp))
+        if rederive is not None:
+            rederive()
+            caught_up = True  # derived state now covers all stored rows
+
+    for root in roots:
+        ensure_batch_layout(spark, root)
     q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option(
-            "checkpointLocation", os.path.join(index_path, "_checkpoint")
-        )
+        read_stream(spark, source_path, schema, max_files=max_files)
+        .writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", f"{index_path}/_checkpoint")
         .start()
     )
     try:
@@ -823,30 +893,6 @@ def _drain_ingest(
         q.stop()
         q.awaitTermination()
     return index_path
-
-
-def _batch_commit_gate(spark, bdir, rederive=None, caught_up=None):
-    """The commit-marker discipline every index ingest shares: the
-    batch directory IS the commit marker. Returns True when the batch
-    is already committed (a REPLAY — after running the once-per-run
-    derived-table catch-up, r9 ADVICE + r10 latch: a crash between a
-    batch publish and its derived-table rewrite must not leave probes
-    blind, and a rebuilt checkpoint replaying many batches must pay
-    ONE idempotent rewrite, not one per batch). Otherwise any torn
-    pre-contract directory is cleaned for a fresh retry and False is
-    returned."""
-    import os
-
-    from parkour_spark import fs as pfs
-
-    if pfs.exists(spark, os.path.join(bdir, "_SUCCESS")):
-        if rederive is not None and not caught_up[0]:
-            rederive()
-            caught_up[0] = True
-        return True
-    if pfs.exists(spark, bdir):
-        pfs.delete(spark, bdir)
-    return False
 
 
 def streaming_minhash_ingest(
@@ -862,89 +908,34 @@ def streaming_minhash_ingest(
     max_bucket: int = 200,
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into a persisted MinHash index —
-    the streaming form of `dedup.minhash_index_build/append`, built on
-    the shared artifact commit contract (parkour_spark.artifacts, r9):
-    each micro-batch's signatures land as their own PARTITION directory
-    `sigs/batch=<id>/`, published atomically (temp-dir + rename, with
-    _SUCCESS inside), and the inverted band table re-derives from ALL
-    stored signature longs after each batch (bucket cap re-applied
-    globally, exactly as batch build/append guarantee).
+    """Exactly-once streaming ingestion into a persisted MinHash index
+    (`dedup.minhash_index_build`; protocol: `_ingest_index`). Each
+    micro-batch's signatures land as `sigs/batch=<id>/`; the band
+    table then re-derives from ALL stored signatures, so the bucket
+    cap stays a property of the full membership, as in build and
+    append. Probe with `dedup.minhash_probe_delta` (the `batch`
+    partition column is ignored by its projections)."""
+    from parkour_spark.operators import dedup as D
 
-    Why this is exactly-once where a plain foreachBatch append is not:
-    a replayed batch (crash after the index write, before the offset
-    commit) would DOUBLE-APPEND with mode("append") — duplicate
-    signature rows that silently double-count bands against the cap.
-    Here the batch directory IS the commit marker: a replay whose
-    `sigs/batch=<id>/_SUCCESS` exists is skipped idempotently, and a
-    torn write never occupies the batch directory name at all
-    (publish_dir renames only after the full write), so the retry is
-    clean. Same recovery discipline as `_snapshot_fold_stream`, applied
-    to an INDEX instead of a snapshot.
-
-    After draining: ingest(Σ batches) ≡ build(all docs) — the
-    registered gate entry pins the probe against the combined-build
-    oracle. Returns `index_path`. Probe with
-    `dedup.minhash_probe_delta` (the partition column `batch` rides the
-    sigs schema and is ignored by the probe's projections)."""
-    import os
-
-    from parkour_spark import fs as pfs
-    from parkour_spark.artifacts import publish_dir, write_params
-    from parkour_spark.operators.dedup import (
-        _write_band_index,
-        minhash_signature,
-    )
-
-    caught_up = [False]
-    rederive = lambda: _write_band_index(  # noqa: E731
-        spark, index_path, id_col, num_hashes, bands, max_bucket
-    )
-
-    def ingest(batch_df, batch_id: int) -> None:
-        bdir = os.path.join(index_path, "sigs", f"batch={batch_id}")
-        if _batch_commit_gate(spark, bdir, rederive, caught_up):
-            return
-        # a retired id must not be re-ingested over a pending ledger —
-        # same invariant the batch append enforces (r11 review)
-        from parkour_spark.operators.indexcommon import (
-            check_ids_not_tombstoned,
-        )
-
-        check_ids_not_tombstoned(
-            spark, index_path, batch_df.select(id_col), id_col
-        )
-        if not pfs.exists(spark, os.path.join(index_path, "meta")):
-            write_params(
-                spark,
-                os.path.join(index_path, "meta"),
-                {
-                    "num_hashes": num_hashes,
-                    "bands": bands,
-                    "ngram_n": ngram_n,
-                    "max_bucket": max_bucket,
-                },
-            )
-        sig = minhash_signature(
-            batch_df, text_col, id_col, num_hashes, ngram_n
-        )
-        rows = sig.select(
-            F.col(id_col),
-            F.array(
-                *[F.col(f"sig_{i}") for i in range(num_hashes)]
-            ).alias("sigs"),
-        )
-        publish_dir(
-            spark,
-            bdir,
-            lambda tmp: rows.write.mode("overwrite").parquet(tmp),
-        )
-        rederive()
-        caught_up[0] = True  # derived state now covers all stored rows
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path + "/sigs"],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[(
+            "sigs",
+            lambda b: D._signature_rows(b, text_col, id_col, num_hashes, ngram_n),
+            None,
+        )],
+        meta=(
+            "meta",
+            D._minhash_meta_record(num_hashes, bands, ngram_n, max_bucket),
+            lambda: D._check_index_meta(
+                spark, index_path, num_hashes, bands, ngram_n, max_bucket
+            ),
+        ),
+        # looked up per call, so a patched module attribute is honoured
+        rederive=lambda: D._write_band_index(
+            spark, index_path, id_col, num_hashes, bands, max_bucket
+        ),
+        id_col=id_col,
     )
 
 
@@ -957,67 +948,31 @@ def streaming_ivf_ingest(
     corpus_vec: str = "embedding",
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into a persisted IVF index —
-    the embedding analog of `streaming_minhash_ingest`: each
-    micro-batch pays its own Arrow assignment scan and lands as an
-    atomically-published `batch=<id>/cell=<c>/` partition tree (the
-    batch directory IS the commit marker: a replay whose _SUCCESS
-    exists skips; a torn write never occupies the name), with the
-    quantizer recorded under _ivf_meta on the first batch and
-    validated implicitly by construction thereafter (one writer, one
-    centroid set — a different quantizer would require a different
-    index root).
+    """Exactly-once streaming ingestion into a persisted IVF index
+    (`similarity.ivf_index_build`; protocol: `_ingest_index`). Each
+    micro-batch pays its own Arrow assignment scan and lands as a
+    `batch=<id>/cell=<c>/` tree under the root, quantizer guarded by
+    `_ivf_meta`. The cell tree is the only state (nothing to
+    re-derive). `ivf_probe_topk` reads the root unchanged: `batch` and
+    `cell` are both partition columns, so its static cell filter prunes
+    across batch directories. `ivf_index_compact` folds the batch trees
+    into the build layout."""
+    from parkour_spark.operators import similarity as S
 
-    `ivf_probe_topk` reads the same root unchanged: underscore paths
-    (_ivf_meta, _checkpoint) are invisible to the file index, `batch`
-    and `cell` are both partition columns, and the probe's static
-    cell filter prunes files ACROSS batch directories — partition
-    pruning composes. After draining, probe ≡ probe(build(all rows)):
-    cell assignment and cnorm are per-row pure functions, and the
-    layout is row-location-agnostic (the registered gate entry pins
-    this against the full-replay oracle). Periodic compaction of many
-    small batch trees is a rebuild (`ivf_index_build`) — cheap
-    relative to the corpus scan it already pays."""
-    import os
-
-    from parkour_spark import fs as pfs
-    from parkour_spark.operators.similarity import (
-        _check_ivf_meta,
-        _write_ivf_meta,
-        ivf_assign_arrow,
-        norm,
-    )
-    from parkour_spark.artifacts import publish_dir
-
-    def ingest(batch_df, batch_id: int) -> None:
-        bdir = os.path.join(index_path, f"batch={batch_id}")
-        # no derived-table catch-up here (unlike minhash/substring):
-        # the probe reads the partition tree directly — the batch dir
-        # IS the only state
-        if _batch_commit_gate(spark, bdir):
-            return
-        if not pfs.exists(spark, os.path.join(index_path, "_ivf_meta")):
-            _write_ivf_meta(spark, index_path, centroids)
-        else:
-            _check_ivf_meta(spark, index_path, centroids)
-        assigned = ivf_assign_arrow(batch_df, centroids, corpus_vec, "cell")
-        rows = assigned.withColumn("cnorm", norm(corpus_vec))
-
-        def write(tmp: str) -> None:
-            (
-                rows.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            # partitioned writes leave _SUCCESS at the tree root — it
-            # rides the rename and becomes the batch commit marker
-
-        publish_dir(spark, bdir, write)
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[(
+            "",
+            lambda b: S.ivf_assign_arrow(b, centroids, corpus_vec, "cell")
+            .withColumn("cnorm", S.norm(corpus_vec))
+            .repartition("cell"),
+            "cell",
+        )],
+        meta=(
+            "_ivf_meta",
+            S._ivf_meta_record(centroids),
+            lambda: S._check_ivf_meta(spark, index_path, centroids),
+        ),
     )
 
 
@@ -1033,64 +988,32 @@ def streaming_substring_ingest(
     max_df: int = 50,
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into the persisted substring
-    index — completes the streaming leg for all THREE persisted
-    indexes (minhash, IVF, substring): each micro-batch pays its own
-    winnowed text scan, its positioned fingerprints land as an
-    atomically-published `occ/batch=<id>/` partition (the commit-
-    marker discipline of `streaming_minhash_ingest`), and the
-    df-capped probe lists re-derive from ALL stored occurrences after
-    each batch — the cap stays a property of the full current
-    membership, exactly as batch build/append guarantee. After
-    draining, probe ≡ probe(build(all docs)) (gate-pinned against the
-    combined-build delta oracle). Parameters are recorded under meta/
-    on the first batch; `substring_probe_persisted` reads the same
-    root unchanged."""
-    import os
+    """Exactly-once streaming ingestion into a persisted substring index
+    (`dedup.substring_index_build`; protocol: `_ingest_index`). Each
+    micro-batch's winnowed, positioned fingerprints land as
+    `occ/batch=<id>/`; the df-capped probe lists then re-derive from
+    ALL stored occurrences, as in build and append.
+    `substring_probe_persisted` reads the root unchanged."""
+    from parkour_spark.operators import dedup as D
 
-    from parkour_spark import fs as pfs
-    from parkour_spark.artifacts import publish_dir, write_params
-    from parkour_spark.operators.dedup import (
-        _positioned_occurrences,
-        _write_substring_lists,
-    )
-
-    caught_up = [False]
-    rederive = lambda: _write_substring_lists(  # noqa: E731
-        spark, index_path, id_col, max_df
-    )
-
-    def ingest(batch_df, batch_id: int) -> None:
-        bdir = os.path.join(index_path, "occ", f"batch={batch_id}")
-        if _batch_commit_gate(spark, bdir, rederive, caught_up):
-            return
-        # a retired id must not be re-ingested over a pending ledger —
-        # same invariant the batch append enforces (r11 review)
-        from parkour_spark.operators.indexcommon import (
-            check_ids_not_tombstoned,
-        )
-
-        check_ids_not_tombstoned(
-            spark, index_path, batch_df.select(id_col), id_col
-        )
-        if not pfs.exists(spark, os.path.join(index_path, "meta")):
-            write_params(
-                spark,
-                os.path.join(index_path, "meta"),
-                {"k": k, "w": w, "max_df": max_df, "id_col": id_col},
-            )
-        occ = _positioned_occurrences(batch_df, text_col, id_col, k, w)
-        publish_dir(
-            spark,
-            bdir,
-            lambda tmp: occ.write.mode("overwrite").parquet(tmp),
-        )
-        rederive()
-        caught_up[0] = True  # derived state now covers all stored rows
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path + "/occ"],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[(
+            "occ",
+            lambda b: D._positioned_occurrences(b, text_col, id_col, k, w),
+            None,
+        )],
+        meta=(
+            "meta",
+            D._substring_meta_record(k, w, max_df, id_col),
+            lambda: D._check_substring_meta(
+                spark, index_path, k, w, max_df, id_col
+            ),
+        ),
+        rederive=lambda: D._write_substring_lists(
+            spark, index_path, id_col, max_df
+        ),
+        id_col=id_col,
     )
 
 
@@ -1104,63 +1027,24 @@ def streaming_pq_ingest(
     id_col: str = "vec_id",
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into a persisted PQ index
-    (r10) — completes the streaming leg for ALL FOUR persisted indexes
-    (minhash, IVF, substring, PQ): each micro-batch pays its own Arrow
-    encode scan against the FIXED codebooks (recorded under meta/ on
-    the first batch, validated thereafter — one writer, one quantizer)
-    and lands as an atomically-published `codes/batch=<id>/` partition
-    (the directory IS the commit marker: a replay whose _SUCCESS
-    exists skips idempotently; a torn write never occupies the name).
+    """Exactly-once streaming ingestion into a persisted PQ index
+    (`pq.pq_index_build`; protocol: `_ingest_index`). Each micro-batch
+    pays its own Arrow encode scan against the FIXED codebooks (guarded
+    by meta/) and lands as `codes/batch=<id>/`. The codes are the only
+    state; `pq_probe_adc` reads the root unchanged, and
+    `pq_index_compact` folds the batches into the flat build layout."""
+    from parkour_spark.operators import pq as P
 
-    Like IVF — and unlike minhash/substring — PQ has no derived table
-    to catch up on the replay-skip path: the codes ARE the only state,
-    and `pq_probe_adc` reads the partition tree directly (the `batch`
-    column rides the schema and is ignored by the probe's column
-    accesses). After draining, probe ≡ probe(build(all rows)): codes
-    are a per-row pure function of (vector, codebooks), and the ADC
-    scan is row-location-agnostic. `pq_index_compact` folds the batch
-    tree into the canonical flat codes table (the terminal fold of a
-    drained run — continue via `pq_index_append` afterwards, the same
-    house contract as the other three indexes)."""
-    import os
-
-    from parkour_spark import fs as pfs
-    from parkour_spark.artifacts import publish_dir, write_params
-    from parkour_spark.operators.pq import (
-        _check_pq_codebooks,
-        _codebooks_record,
-        pq_encode,
-    )
-
-    def ingest(batch_df, batch_id: int) -> None:
-        bdir = os.path.join(index_path, "codes", f"batch={batch_id}")
-        if _batch_commit_gate(spark, bdir):
-            return  # replayed batch: committed, and codes are the only state
-        if not pfs.exists(spark, os.path.join(index_path, "meta")):
-            write_params(
-                spark,
-                os.path.join(index_path, "meta"),
-                {
-                    "m": len(codebooks),
-                    "ksub": len(codebooks[0]),
-                    "dsub": len(codebooks[0][0][1]),
-                    "id_col": id_col,
-                    "codebooks": _codebooks_record(codebooks),
-                },
-            )
-        else:
-            _check_pq_codebooks(spark, index_path, codebooks)
-        codes = pq_encode(batch_df, codebooks, vec_col, id_col)
-        publish_dir(
-            spark,
-            bdir,
-            lambda tmp: codes.write.mode("overwrite").parquet(tmp),
-        )
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path + "/codes"],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[
+            ("codes", lambda b: P.pq_encode(b, codebooks, vec_col, id_col), None)
+        ],
+        meta=(
+            "meta",
+            P._pq_meta_record(codebooks, id_col),
+            lambda: P._check_pq_codebooks(spark, index_path, codebooks),
+        ),
     )
 
 
@@ -1174,82 +1058,34 @@ def streaming_text_ingest(
     n_buckets: int = 16,
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into the persisted full-text
-    index (r10) — the fifth index family's streaming leg: each
-    micro-batch pays its own tokenize + batch-sized shuffle, landing
-    as atomically-published `doclen/batch=<id>/` and
-    `postings/batch=<id>/tbucket=<b>/` partitions, with the 1-row
-    stats table re-derived from the full stored doclen after each
-    batch (derived state, the bands/lists discipline).
+    """Exactly-once streaming ingestion into the persisted full-text
+    index (`textindex.text_index_build`; protocol: `_ingest_index`).
+    Each micro-batch pays its own tokenize + batch-sized shuffle and
+    lands as `doclen/batch=<id>/` then `postings/batch=<id>/tbucket=<b>/`
+    — one commit unit whose postings marker is the commit point; the
+    1-row stats table then re-derives from the full stored doclen.
+    `text_index_compact` is the terminal fold."""
+    from parkour_spark.operators import textindex as X
 
-    Two directories per batch form ONE commit unit: doclen publishes
-    FIRST, postings second, and the POSTINGS marker is the commit
-    point. A replay whose postings marker exists skips (and re-runs
-    the idempotent stats rewrite — the r9-ADVICE catch-up rule, since
-    a crash can land between the postings publish and the stats
-    rewrite); a replay that finds doclen committed but postings not is
-    the torn middle state — both dirs are rebuilt, so the pair commits
-    or neither does. After draining: probe ≡ probe(build(all)),
-    gate-pinned; `text_index_compact` is the terminal fold."""
-    import os
-
-    from parkour_spark import fs as pfs
-    from parkour_spark.artifacts import publish_dir, write_params
-    from parkour_spark.operators.indexcommon import check_ids_not_tombstoned
-    from parkour_spark.operators.textindex import (
-        _check_text_meta,
-        _doclen,
-        _postings,
-        _write_stats,
-    )
-
-    caught_up = [False]
-    rederive = lambda: _write_stats(spark, index_path)  # noqa: E731
-
-    def ingest(batch_df, batch_id: int) -> None:
-        pdir = os.path.join(index_path, "postings", f"batch={batch_id}")
-        ldir = os.path.join(index_path, "doclen", f"batch={batch_id}")
-        # the POSTINGS marker is the pair's commit point
-        if _batch_commit_gate(spark, pdir, rederive, caught_up):
-            return
-        # a retired id must not be re-ingested over a pending ledger —
-        # same invariant the batch append enforces (r11 review)
-        check_ids_not_tombstoned(
-            spark, index_path, batch_df.select(id_col), id_col
-        )
-        if not pfs.exists(spark, os.path.join(index_path, "meta")):
-            write_params(
-                spark,
-                os.path.join(index_path, "meta"),
-                {"n_buckets": n_buckets, "id_col": id_col},
-            )
-        else:
-            _check_text_meta(spark, index_path, n_buckets)
-        if pfs.exists(spark, ldir):
-            pfs.delete(spark, ldir)  # torn pair: doclen, no postings
-        publish_dir(
-            spark,
-            ldir,
-            lambda tmp: _doclen(batch_df, text_col, id_col)
-            .write.mode("overwrite")
-            .parquet(tmp),
-        )
-        publish_dir(
-            spark,
-            pdir,
-            lambda tmp: _postings(batch_df, text_col, id_col, n_buckets)
-            .repartition("tbucket")
-            .sortWithinPartitions("term", id_col)
-            .write.mode("overwrite")
-            .partitionBy("tbucket")
-            .parquet(tmp),
-        )
-        _write_stats(spark, index_path)
-        caught_up[0] = True  # derived state now covers all stored rows
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path + "/postings", index_path + "/doclen"],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[
+            ("doclen", lambda b: X._doclen(b, text_col, id_col), None),
+            (
+                "postings",
+                lambda b: X._postings(b, text_col, id_col, n_buckets)
+                .repartition("tbucket")
+                .sortWithinPartitions("term", id_col),
+                "tbucket",
+            ),
+        ],
+        meta=(
+            "meta",
+            X._text_meta_record(n_buckets, id_col),
+            lambda: X._check_text_meta(spark, index_path, n_buckets),
+        ),
+        rederive=lambda: X._write_stats(spark, index_path),
+        id_col=id_col,
     )
 
 
@@ -1264,52 +1100,26 @@ def streaming_ivfpq_ingest(
     id_col: str = "vec_id",
     max_files: int = 1,
 ) -> str:
-    """EXACTLY-ONCE streaming ingestion into the persisted IVF-PQ
-    composite index (r10): each micro-batch pays one assign+encode
-    Arrow pass against the FIXED persisted quantizer pair (recorded
-    under _ivfpq_meta on the first batch, validated thereafter) and
-    lands as an atomically-published batch=<id>/cell=<c> partition
-    tree — the IVF commit-marker discipline applied to residual codes.
-    Codes are the only state (no derived table to catch up on the
-    replay-skip path), and `ivfpq_probe_topk` reads the same root
-    unchanged: the static cell filter prunes files ACROSS batch
-    directories. After draining, probe ≡ probe(build(all rows));
-    `ivfpq_index_compact` is the terminal fold into the canonical
-    cell= layout (continue via ivfpq_index_append afterwards — the
-    house contract)."""
-    import os
+    """Exactly-once streaming ingestion into the persisted IVF-PQ index
+    (`pq.ivfpq_index_build`; protocol: `_ingest_index`). Each
+    micro-batch pays one assign+encode Arrow pass against the FIXED
+    quantizer pair (guarded by `_ivfpq_meta`) and lands as a
+    `batch=<id>/cell=<c>/` tree under the root. The codes are the only
+    state; `ivfpq_probe_topk` reads the root unchanged, and
+    `ivfpq_index_compact` folds the batches into the `cell=` layout."""
+    from parkour_spark.operators import pq as P
 
-    from parkour_spark import fs as pfs
-    from parkour_spark.artifacts import publish_dir, write_params
-    from parkour_spark.operators.pq import (
-        _check_ivfpq_meta,
-        _ivfpq_encode_rows,
-        _ivfpq_meta_record,
-    )
-
-    def ingest(batch_df, batch_id: int) -> None:
-        bdir = os.path.join(index_path, f"batch={batch_id}")
-        if _batch_commit_gate(spark, bdir):
-            return  # replayed batch: committed; codes are the only state
-        if not pfs.exists(spark, os.path.join(index_path, "_ivfpq_meta")):
-            write_params(
-                spark,
-                os.path.join(index_path, "_ivfpq_meta"),
-                _ivfpq_meta_record(coarse, codebooks, id_col),
-            )
-        else:
-            _check_ivfpq_meta(spark, index_path, coarse, codebooks)
-        rows = _ivfpq_encode_rows(batch_df, coarse, codebooks, vec_col, id_col)
-        publish_dir(
-            spark,
-            bdir,
-            lambda tmp: rows.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp),
-        )
-
-    return _drain_ingest(
-        spark, source_path, schema, index_path, ingest, max_files,
-        normalize=[index_path],
+    return _ingest_index(
+        spark, source_path, schema, index_path, max_files,
+        tables=[(
+            "",
+            lambda b: P._ivfpq_encode_rows(b, coarse, codebooks, vec_col, id_col)
+            .repartition("cell"),
+            "cell",
+        )],
+        meta=(
+            "_ivfpq_meta",
+            P._ivfpq_meta_record(coarse, codebooks, id_col),
+            lambda: P._check_ivfpq_meta(spark, index_path, coarse, codebooks),
+        ),
     )

@@ -180,23 +180,6 @@ def test_streaming_ingest_replay_batch_skips(spark, setup, tmp_path):
     assert stored == set(range(10)), "committed batch dir won"
 
 
-def test_streaming_ingest_codebook_mismatch_raises(spark, setup, tmp_path):
-    from parkour_spark.streaming.windows import streaming_pq_ingest
-
-    emb, cbs, queries, _tf = setup
-    src = str(tmp_path / "src")
-    emb.coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    idx = str(tmp_path / "idx")
-    pq_index_build(emb.limit(5), cbs, idx)
-    other = pq_train(emb, m=4, ksub=4, iters=1)
-    assert other != cbs
-    # the guard raises inside foreachBatch; Spark surfaces it as a
-    # StreamingQueryException wrapping the original message
-    with pytest.raises(Exception, match="codebook mismatch"):
-        streaming_pq_ingest(spark, src, schema, idx, other)
-
-
 def test_delete_audit_verifies_removal(spark, setup, tmp_path):
     """artifacts.ids_remaining audits the PQ codes table like the
     other index tables: lingering before, clean after."""

@@ -1,15 +1,11 @@
 """r11 ADVICE closures (r12): the meta-less-compact refusal for the
-capped dedup indexes, and the auto-compact threshold that keeps
-compliance deletes from retaining retired bytes indefinitely."""
+capped dedup indexes."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from parkour_spark import fs as pfs
-from parkour_spark.operators.indexcommon import (
-    pending_tombstone_count,
-    read_tombstones,
-)
+from parkour_spark.operators.indexcommon import read_tombstones
 
 
 def _docs(spark, n=30):
@@ -72,56 +68,3 @@ def test_metaless_compact_without_ledger_still_folds(spark, tmp_path):
     minhash_index_build(_docs(spark), idx)
     pfs.delete(spark, idx + "/meta")
     minhash_index_compact(spark, idx)  # must not raise
-
-
-def test_text_delete_auto_compact_threshold(spark, tmp_path):
-    """auto_compact_threshold: once the pending ledger exceeds N ids,
-    the delete runs the family compact inline — the retired bytes are
-    physically gone and the ledger is clear (the compliance path)."""
-    from parkour_spark.artifacts import ids_remaining
-    from parkour_spark.operators.textindex import (
-        text_index_build,
-        text_index_delete,
-    )
-
-    idx = str(tmp_path / "tx")
-    text_index_build(_docs(spark), idx, n_buckets=4)
-    retire = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    text_index_delete(spark, retire, idx, auto_compact_threshold=5)
-    assert pending_tombstone_count(spark, idx) == 2  # under: deferred
-    more = spark.createDataFrame([(i,) for i in range(3, 8)], "doc_id long")
-    text_index_delete(spark, more, idx, auto_compact_threshold=5)
-    assert pending_tombstone_count(spark, idx) == 0  # over: reconciled
-    assert ids_remaining(
-        spark, idx + "/doclen", "doc_id", [1, 2, 3, 4, 5, 6, 7]
-    ) == []
-
-
-def test_minhash_delete_auto_compact_threshold(spark, tmp_path):
-    from parkour_spark.artifacts import ids_remaining
-    from parkour_spark.operators.dedup import (
-        minhash_index_build,
-        minhash_index_delete,
-    )
-
-    idx = str(tmp_path / "mh")
-    minhash_index_build(_docs(spark), idx)
-    retire = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
-    minhash_index_delete(spark, retire, idx, auto_compact_threshold=2)
-    assert pending_tombstone_count(spark, idx) == 0
-    assert ids_remaining(spark, idx + "/sigs", "doc_id", [0, 1, 2, 3]) == []
-
-
-def test_substring_delete_auto_compact_threshold(spark, tmp_path):
-    from parkour_spark.artifacts import ids_remaining
-    from parkour_spark.operators.dedup import (
-        substring_index_build,
-        substring_index_delete,
-    )
-
-    idx = str(tmp_path / "ss")
-    substring_index_build(_docs(spark), idx)
-    retire = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
-    substring_index_delete(spark, retire, idx, auto_compact_threshold=2)
-    assert pending_tombstone_count(spark, idx) == 0
-    assert ids_remaining(spark, idx + "/occ", "doc_id", [0, 1, 2, 3]) == []
